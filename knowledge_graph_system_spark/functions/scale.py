@@ -31,8 +31,11 @@ lookup, not a plan change.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def maybe_broadcast(
@@ -58,18 +61,27 @@ def fan_out(df: DataFrame) -> DataFrame:
 def local_df(spark, data, schema) -> DataFrame:
     """`createDataFrame` for SMALL driver-side lists, in ONE partition.
 
-    PySpark's `createDataFrame` parallelizes local data into
-    `defaultParallelism` slices — a 9-row vocabulary or a 1-row stat
-    frame becomes a 32-partition ExistingRDD scan, so every broadcast
-    build over it runs 32 near-empty tasks and a cartesian/BNLJ of two
-    such frames schedules 32x32 = 1024 tasks of pure overhead (measured
-    15.8 s for the 36-row vocab pair join at sf0.1 — r17, guide §2.2
-    "fewer, larger tasks"). NOT `.coalesce(1)`: each parent partition of
-    a parallelized collection is evaluated through its own Python-runner
-    round, and CoalesceExec chains all 32 sequentially into one task
-    (measured 4 s per action, every action). `parallelize(data, 1)`
-    builds the one-slice RDD directly (measured 0.18 s cold). Callers
-    own the smallness contract — this is for seed/stat/codebook/
-    vocabulary frames, not data tables.
+    `schema` is a DDL string. The rows become one Arrow table that Spark
+    plans as `LocalTableScan`, a JVM local relation: collecting a 1-row
+    frame launches no job, and broadcasting it runs one short JVM task
+    with no Python worker. The row-list path (`createDataFrame` over a
+    list or an RDD) is an ExistingRDD scan whose every action runs a
+    `map(toInternal)` PythonRDD, a Python-worker round per partition
+    (150-260 ms per 1-row seed broadcast or collect on a 4-core host,
+    three of them in a depth-2 BFS). `LocalTableScan` splits into min(rows,
+    defaultParallelism) partitions, so frames of more than one row are
+    coalesced to one: a cartesian/BNLJ of two multi-row frames then
+    schedules 1 task, not rows x rows (r17 measured 15.8 s for 32x32
+    tasks of the 36-row vocab pair join at sf0.1). Callers own the
+    smallness contract: this is for seed/stat/codebook/vocabulary
+    frames, not data tables.
     """
-    return spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(data)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    df = spark.createDataFrame(table, struct)
+    return df.coalesce(1) if len(rows) > 1 else df

@@ -96,11 +96,14 @@ def bfs(
     0..dist(stop_at) instead of 0..max_depth. The target probe is fused
     into the level count's aggregate — no extra job. Used by the
     shortest-path corridor (`setops.path_to`), whose corridor members
-    all satisfy dist_fwd ≤ dist(from, to) by definition.
+    all satisfy dist_fwd ≤ dist(from, to) by definition. A `stop_at`
+    among the seeds is at depth 0, so the seeds are returned unexpanded.
     """
     spark = edges.sparkSession
     adj = directed_edges(edges, direction, min_confidence, rel_types)
     visited = local_df(spark, [(s, 0) for s in start_ids], "node_id string, dist int")
+    if stop_at is not None and stop_at in start_ids:
+        return visited
     frontier = visited.select("node_id")
     n_frontier: int | None = len(start_ids)
     n_visited = len(start_ids)

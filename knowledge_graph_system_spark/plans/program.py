@@ -233,8 +233,10 @@ def execute_program(
     statements an aborting `!`/timeout would never reach, so `dispatch`
     must be (a) thread-safe, (b) pure with respect to the working graph
     (R is a function of the engine context and `source` only — the
-    in-repo SO9 dispatch is, by construction), and (c) side-effect-free
-    (a speculative invocation may run and be discarded). A dispatch that
+    in-repo SO9 dispatch is, by construction), (c) side-effect-free
+    (a speculative invocation may run and be discarded), and (d) launch
+    its Spark jobs from the calling thread, or an abort cannot cancel
+    them (see `_group_dispatch`). A dispatch that
     is side-effecting, reads W, or is not thread-safe must pass
     `pre_dispatch=False`, which restores strictly sequential
     dispatch-at-fold semantics (same results, no overlap).
@@ -278,7 +280,13 @@ def _group_dispatch(sc, gid: str, dispatch, source) -> "tuple[Result, float]":
     block's job group (thread-local, so it must be set INSIDE the
     worker) so an aborting fold can cancel still-running speculative
     dispatches instead of leaking them past execute_program's return
-    (ADVICE r17: leaked jobs contaminated subsequent measured legs)."""
+    (leaked jobs contaminated subsequent measured legs).
+
+    Dispatch contract: `dispatch` must launch its Spark jobs from the
+    calling thread. The group is thread-local, so jobs that a dispatch
+    launches from threads of its own need not carry it, and an abort's
+    cancelJobGroup would not reach them. The in-repo SO9 dispatch is
+    single-threaded."""
     sc.setJobGroup(gid, "so-program pre-dispatch")
     return _checkpointed_dispatch(dispatch, source)
 

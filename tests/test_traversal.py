@@ -203,3 +203,112 @@ def test_enumerate_paths_beam_bounded(ctx):
     )
     assert all(c <= 5 * maxdeg for c in tiny_counts)
     assert [r["hops"] for r in tiny] == sorted(r["hops"] for r in tiny)
+
+
+def _python_fed_scans(df) -> list[str]:
+    """RDD scans in `df`'s physical plan, broadcast sides included, whose
+    RDD is computed by a Python worker (a `createDataFrame` over a
+    Python RDD). Checkpointed levels are RDD scans too, so the plan
+    string alone cannot tell the two apart; the RDD lineage can."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        elif name == "ReusedExchange":
+            todo.append(node.child())
+        elif name.startswith("Scan ExistingRDD") and "PythonRDD" in node.rdd().toDebugString():
+            found.append(name)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def _run_in_group(sc, gid: str, fn):
+    """Run `fn` with its Spark jobs in job group `gid` → (result, job ids)."""
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, sc.statusTracker().getJobIdsForGroup(gid)
+
+
+def test_traversal_plans_have_no_python_fed_scan(ctx, monkeypatch):
+    """Seed, visited and result frames are JVM local relations
+    (`local_df`): no level plan nor returned plan of bfs,
+    shortest_path_length or enumerate_paths scans a Python-fed RDD."""
+    DataFrame = type(ctx.edges)
+    checkpoint = DataFrame.localCheckpoint
+    bad: list[tuple[str, str]] = []
+
+    def spy(self, *args, **kwargs):
+        bad.extend(("level", s) for s in _python_fed_scans(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    for name, df in (
+        ("bfs", bfs(ctx.edges, [START], 2)),
+        ("shortest_path_length", shortest_path_length(ctx.edges, START, "S1")),
+        ("enumerate_paths", enumerate_paths(ctx.edges, START, "S1", max_hops=3)),
+    ):
+        bad.extend((name, s) for s in _python_fed_scans(df))
+        assert df.collect()
+    assert not bad, bad
+
+
+def test_depth1_bfs_broadcasts_its_seed_once(ctx):
+    """A warm depth-1 bfs broadcasts its 1-row seed at most once: the
+    frontier and visited sides are the same local relation, so the
+    second broadcast is a ReusedExchange."""
+    sc = ctx.spark.sparkContext
+    run = lambda: bfs(ctx.edges, [START], 1).collect()  # noqa: E731
+    run()
+    rows, jobs = _run_in_group(sc, "test-bfs-depth1", run)
+    assert rows
+    st = sc.statusTracker()
+    one_task = [
+        j for j in jobs
+        if [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds] == [1]
+    ]
+    assert len(one_task) <= 1, (jobs, one_task)
+
+
+def test_path_to_same_node_runs_no_expansion(ctx, monkeypatch):
+    """`bfs(stop_at=...)` with the target among the seeds returns the
+    seeds (distance 0) without expanding a level: a path_to corridor
+    from a node to itself runs no forward-wave job, and its rows equal
+    those of the full forward wave."""
+    from knowledge_graph_system_spark.operators import setops, traversal
+
+    sc = ctx.spark.sparkContext
+    real_bfs = traversal.bfs
+    fwd_jobs: list[int] = []
+
+    def probed(*args, **kwargs):
+        if kwargs.get("stop_at") is None:
+            return real_bfs(*args, **kwargs)
+        out, jobs = _run_in_group(sc, "test-path-to-self-fwd", lambda: real_bfs(*args, **kwargs))
+        fwd_jobs.extend(jobs)
+        return out
+
+    def full_wave(*args, stop_at=None, **kwargs):
+        return real_bfs(*args, **kwargs)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    dispatch = setops.make_dispatch(ctx)
+    same = {"kind": "path_to", "from_id": START, "to_id": START}
+    monkeypatch.setattr(traversal, "bfs", probed)
+    fast = dispatch(same)
+    assert fwd_jobs == []
+    monkeypatch.setattr(traversal, "bfs", full_wave)
+    full = dispatch(same)
+    assert rows(fast.nodes) == rows(full.nodes)
+    assert rows(fast.links) == rows(full.links)
+    assert {r["node_id"] for r in fast.nodes.collect()} == {START}
