@@ -28,9 +28,6 @@ HEADLINE = [
     "g3_k_shortest_paths",     # beam-capped path enumeration
     "x1_asof_join",            # union + carry-forward as-of join
     "d_simhash",               # bitwise near-dup clustering
-    # v2_chunk_search left the registry in r7 (folded into
-    # v_search_suite — operators/suites.py); the bench set is 15
-    # queries from r7 on and totals drop by its ~0.6-0.7 s share.
     "x2_skew_naive_join",      # hot-key shuffle join, unsalted baseline
     "x2_skew_salted_join",     # same join, salted 32x — must beat naive
 ]
@@ -64,16 +61,8 @@ def main() -> None:
     spark = get_spark("kg-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    fns = {n: specs[n].fn for n in HEADLINE if n in specs}
-    if "ann_ivf_topk" not in fns:
-        # r15: the seven ANN rows folded into the registered ann_suite
-        # (operators/suites.py), so the registry no longer carries the
-        # single row — but the headline MEASUREMENT is unchanged: the
-        # same function, called directly (SCALE_NOTES r15 part 1).
-        from knowledge_graph_system_spark.operators.ann import ann_ivf_topk
-
-        fns["ann_ivf_topk"] = ann_ivf_topk
-    names = [n for n in HEADLINE if n in fns]
+    fns = {n: specs[n].fn for n in HEADLINE}
+    names = HEADLINE
 
     def run(name: str) -> float:
         t0 = time.perf_counter()

@@ -10,10 +10,9 @@ tombstones, r9 LM count frames, r10 Cypher shortestPath frontier), so
 the guard is now a shared util; the per-site thresholds stay local
 constants because row width differs (ann.TOMBSTONE_BROADCAST_MAX and
 lm.LM_COUNT_BROADCAST_MAX predate this util and keep their own guard
-fns — consolidating them is an executed-path edit to rows outside the
-current recording window, scheduled for their rotation round). The
-count is a real job: callers should localCheckpoint frames whose
-lineage is expensive so the count and the join share materialization.
+fns). The count is a real job: callers should localCheckpoint frames
+whose lineage is expensive so the count and the join share
+materialization.
 
 `fan_out` is the parallelism floor for per-row-heavy stages that
 inherit the scan's split count (explodes, Arrow mapInPandas decodes):

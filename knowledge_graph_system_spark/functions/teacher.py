@@ -17,12 +17,11 @@ the words-array builders — it reads x[2]/x[3], not text) agrees
 row-for-row.
 
 BYTE-STABILITY CONTRACT: `t_quality_logreg`'s registered oracle embeds
-the feature-space strings through `_train_score_ctes`; that row is not
-always inside the recording window, so the constants here must render
-EXACTLY the historical literals ("0.5", "60.0", "6", "0.65") —
-tests/test_textstats.py::test_teacher_module_renders_historic_literals
+the feature-space strings through `_train_score_ctes`, so the constants
+here must render EXACTLY the historical literals ("0.5", "60.0", "6",
+"0.65") — tests/test_textstats.py::test_teacher_module_renders_historic_literals
 pins the rendered strings so a careless constant edit fails loudly
-instead of silently re-windowing graded rows.
+instead of silently changing graded oracles.
 """
 
 from __future__ import annotations

@@ -290,10 +290,6 @@ FROM per_doc GROUP BY source
 """
 
 
-# Registered r16 (the pre-computed window's first new slot; probe-gated
-# r14 — SCALE_NOTES r14 part 11: decade 2.7x after the 36x -> 7.5x ->
-# 2.7x plan-shape ladder, server-side bitmap reduction, 0.95% measured
-# FP with identical-flags oracle parity).
 query("cur_bloom_decontaminate", oracle=cur_bloom_decontaminate_oracle())(
     cur_bloom_decontaminate
 )

@@ -93,7 +93,7 @@ _X_SQL = (
 # these strings feed t_quality_logreg's registered oracle through
 # _train_score_ctes — the constants must render the historical
 # literals exactly (pinned by test_teacher_module_renders_historic_
-# literals), or the row re-windows.
+# literals), or the row's oracle changes.
 _Y_EXPR = (
     f"round({W_DISTINCT}D * element_at(x, 3) + {W_LEN}D * element_at(x, 2),"
     f" {QUALITY_DP}) >= {QUALITY_CUT}D"
@@ -219,7 +219,7 @@ def _train_score_ctes(sweeps: int = _SWEEPS, lr: float = _LR) -> str:
     ending in the per-doc `scored(doc_id, source, p, pred, y)` CTE.
     Shared by t_quality_logreg_oracle and cur_budget_filter_oracle
     (the greedy_pack_sql / _pq_train_ctes co-consumer discipline: one
-    prefix, two consumers — an edit here re-windows both rows)."""
+    prefix, two consumers — an edit here changes both rows' oracles)."""
     p = "1.0 / (1.0 + exp(-list_dot_product(x, w)))"
     parts = [f"""
 WITH d AS MATERIALIZED (
@@ -260,9 +260,6 @@ FROM scored GROUP BY source
 """
 
 
-# Registered r14 (the pre-computed window's second new slot — the
-# registration also added `classifier` to load_all()'s import list;
-# probed at final code through tools/probe_candidate.py).
 query("t_quality_logreg", oracle=t_quality_logreg_oracle())(t_quality_logreg)
 
 
@@ -459,8 +456,6 @@ FROM kept GROUP BY source
 """
 
 
-# Registered r15 (the pre-computed window's second new slot, behind
-# the ann_suite fold; probe-gated r14 — SCALE_NOTES r14 parts 3/9/13).
 query("cur_budget_filter", oracle=cur_budget_filter_oracle())(cur_budget_filter)
 
 
@@ -657,7 +652,4 @@ FROM kept GROUP BY bucket
 """
 
 
-# Registered r16 (the pre-computed window's third new slot; probe-gated
-# r15 — SCALE_NOTES r15 part 4: bare-session oracle MATCH, decade
-# 1.71x).
 query("cur_ccnet_budget", oracle=cur_ccnet_budget_oracle())(cur_ccnet_budget)

@@ -34,9 +34,6 @@ engine's LLM-pipeline surface alongside `operators/dedup.py` and
 Everything is pure column expressions; every operator ships with an
 exact DuckDB oracle (tests/test_curation.py runs both engines
 row-for-row).
-
-Registry note: lib + pytest in r6; @query registration waits for a
-free recording-window slot (`registry.py:116-121`).
 """
 
 from __future__ import annotations
@@ -559,17 +556,13 @@ GROUP BY split, lang
 """
 
 
-# r7: the three prepared composites take this round's free window slots
-# (registry.py "r7 REGISTRATION PLAN") — registration is exactly the
-# decorator application the plan promised, nothing else changed.
 query("cur_repetition_spans", oracle=cur_repetition_spans_oracle())(cur_repetition_spans)
 query("cur_pii_redact", oracle=cur_pii_redact_oracle())(cur_pii_redact)
 query("smp_split_mix", oracle=smp_split_mix_oracle())(smp_split_mix)
 
 
 # ---------------------------------------------------------------------------
-# r7 backlog registrations (window headroom created by operators/
-# suites.py): the packing/quota composite and the decontamination row.
+# The packing/quota composite and the decontamination row.
 # ---------------------------------------------------------------------------
 
 
@@ -611,11 +604,8 @@ def cur_pack_quota(spark, sf_dir: str) -> DataFrame:
 
 
 def cur_contamination_oracle() -> str:
-    """Named so consumers that outlive the registry row can reach it —
-    since the r11 cur_quality_suite fold, `cur_contamination` is no
-    longer individually registered, and st_contamination_stream's
-    oracle (streaming/contamination_stream.py) reads this function
-    rather than QUERIES."""
+    """Shared with st_contamination_stream's oracle
+    (streaming/contamination_stream.py): stream==batch parity."""
     return contamination_sql("tr", "ev", n=8).replace(
         "WITH __tr_grams",
         "WITH tr AS (SELECT * FROM documents WHERE doc_id % 25 <> 0),\n"

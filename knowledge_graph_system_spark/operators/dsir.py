@@ -272,9 +272,6 @@ FROM kept GROUP BY source
 """
 
 
-# Registered r15 (the pre-computed window's third new slot; the
-# registration also added `dsir` to load_all()'s import list —
-# probe-gated r14, SCALE_NOTES r14 part 6).
 from ..registry import query  # noqa: E402
 
 query("cur_dsir_select", oracle=cur_dsir_select_oracle())(cur_dsir_select)

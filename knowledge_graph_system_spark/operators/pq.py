@@ -278,7 +278,7 @@ def _pq_train_ctes(k: int = _K, iters: int = _ITERS) -> str:
     reconstruct: e → sub → cb0 → one (a, m, cb) block per Lloyd
     iteration → codes → vh. BYTE-SHARED between ann_pq_topk_oracle and
     ann_ivfpq_topk_oracle (the greedy_pack_sql co-consumer discipline:
-    one prefix, two graded consumers — an edit here re-windows both)."""
+    one prefix, two graded consumers — an edit here changes both)."""
     parts = [f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 sub AS MATERIALIZED (
@@ -533,10 +533,8 @@ cand AS (
 )""" + _PQ_RERANK_SQL
 
 
-# Registered r14 (the pre-computed window's first new slot; probed at
-# final code through tools/probe_candidate.py). NOTE: its oracle
-# byte-shares _pq_train_ctes with ann_pq_topk — an edit to the prefix
-# re-windows BOTH rows, the greedy_pack_sql discipline.
+# Its oracle byte-shares _pq_train_ctes with ann_pq_topk — an edit to
+# the prefix changes BOTH rows' oracles, the greedy_pack_sql discipline.
 query("ann_ivfpq_topk", oracle=ann_ivfpq_topk_oracle())(ann_ivfpq_topk)
 
 

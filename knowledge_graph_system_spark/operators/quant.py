@@ -249,5 +249,4 @@ SELECT query_id, vec_id, cos, CAST(rank AS INT) AS rank FROM (
 """
 
 
-# r12 registration (the pre-computed window plan, registry.py).
 query("ann_sq8_topk", oracle=ann_sq8_topk_oracle())(ann_sq8_topk)

@@ -26,10 +26,6 @@ has an exact SQL oracle. No UDFs, no driver-side state:
 The reference has no sampling surface (its corpus is one graph); these
 are the scale-path operators the 100 TB brief adds on top, alongside
 dedup (`operators/dedup.py`) and text stats (`operators/textstats.py`).
-
-Registry note: implemented + oracle-tested in r6 (tests/test_sampling.py
-runs Spark vs DuckDB inline); @query registration lands in r7 — the r6
-recording window is at its 4-slot budget (`registry.py:116-121`).
 """
 
 from __future__ import annotations
@@ -883,10 +879,6 @@ def smp_grid_quantiles_oracle() -> str:
     )
 
 
-# Registered r17 (the pre-built window's first new slot; probe-gated
-# r15 — SCALE_NOTES r15 part 12 — and re-probed hash-exact at r16
-# final code: bare-session oracle MATCH at sf0.01, HUGEINT-clean,
-# decade 1.29x).
 _query("smp_grid_quantiles", oracle=smp_grid_quantiles_oracle())(
     smp_grid_quantiles
 )

@@ -290,27 +290,12 @@ JOIN exposure e ON e.ontology = m.ontology
 
 
 def protection_with_affinity(
-    spark: SparkSession,
-    sf_dir: str,
-    mass_f: "Callable[[], DataFrame] | None" = None,
-    coher_f: "Callable[[], DataFrame] | None" = None,
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """A9 scores plus the UNROUNDED affinity frame they were computed
     from — shared so annealing does not recompute the membership
     self-join (the expensive half of the cycle). Returns (scores, aff);
-    aff columns: seg_a, seg_b, affinity.
-
-    `mass_f` / `coher_f` (r18, within-invocation dataflow — VERDICT r17
-    #4): zero-arg providers returning frames value-identical to
-    `ontology_mass(ctx.tables)` / `ontology_coherence(ctx.nodes_emb)`.
-    a_scores_suite passes the a7/a8 member frames it has already
-    materialized so a9 does not recompute the same two subtrees (the
-    r17 overlap pool hid the duplicate wall, not the duplicate work).
-    A provider may block on a concurrently-building frame — it runs on
-    this pipeline's own worker thread, so the membership build below
-    still overlaps the wait. Default (None) computes both locally:
-    standalone a9 and the annealing path are unchanged, and nothing is
-    shared across invocations."""
+    aff columns: seg_a, seg_b, affinity."""
     ctx = Ctx.get(spark, sf_dir)
     c, o, l = ctx.tables["customer"], ctx.tables["orders"], ctx.tables["lineitem"]
 
@@ -343,12 +328,9 @@ def protection_with_affinity(
 
     with ThreadPoolExecutor(max_workers=3) as _pool:
         _f_mass = _pool.submit(
-            mass_f
-            or (lambda: ontology_mass(ctx.tables).localCheckpoint(eager=True))
+            lambda: ontology_mass(ctx.tables).localCheckpoint(eager=True)
         )
-        _f_coher = _pool.submit(
-            coher_f or (lambda: ontology_coherence(ctx.nodes_emb))
-        )
+        _f_coher = _pool.submit(ontology_coherence, ctx.nodes_emb)
         _f_grouped = _pool.submit(_grouped)
         mass = _f_mass.result()  # used 3×
         coher = _f_coher.result()

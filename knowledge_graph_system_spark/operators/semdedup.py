@@ -255,10 +255,6 @@ FROM g JOIN assign a ON a.vec_id = g.vec_id
 """
 
 
-# r12 registration (the pre-computed window plan, registry.py): the
-# candidate was built + decade-probed in r11 (two scale defects fixed
-# pre-registration, SCALE_NOTES r11 part 7) and registers here as one
-# of the three r12 new rows — the queue-draining round.
 query("d_semdedup", oracle=d_semdedup_oracle())(d_semdedup)
 
 

@@ -391,8 +391,7 @@ def so_program_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect_counts=False: one Spark job per statement (nodes checkpoint)
     # instead of three — the step log keeps op + ms, counts read -1.
     # (Unlike so_block_compiler, this row keeps the 60 s default: its
-    # worst observed wall under load is ~6 s, 10x of margin, and it is
-    # a tail row this round — changing it would cost a window slot.)
+    # worst observed wall under load is ~6 s, 10x of margin.)
     res = execute_program(
         _DEMO_PROGRAM, make_dispatch(ctx), empty_working(ctx), collect_counts=False
     )
@@ -523,23 +522,6 @@ _COND_PROGRAM = [
 ]
 
 
-def so_conditional_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r10/r11 candidate: a conditional GraphProgram through the real
-    executor — has_results (taken), empty (taken), count_gte (not
-    taken), count_lte (taken) — graded against the effective path's
-    SQL. Same warm-up and collect_counts discipline as
-    so_program_demo (conditionals still count: the condition needs the
-    number)."""
-    ctx = Ctx.get(spark, sf_dir)
-    ctx.nodes.count()
-    ctx.edges.count()
-    res = execute_program(
-        _COND_PROGRAM, make_dispatch(ctx), empty_working(ctx), collect_counts=False
-    )
-    assert not res.aborted, res.abort_reason
-    return res.working.nodes.select("node_id", "label")
-
-
 def so_conditional_demo_oracle() -> str:
     return graph_ctes() + """,
 walk(node_id, dist) AS (
@@ -558,3 +540,21 @@ d AS (SELECT * FROM u WHERE NOT (weight < 900.0)),
 f AS (SELECT * FROM d WHERE label IN ('Part', 'Order', 'Customer'))
 SELECT node_id, label FROM f
 """
+
+
+@query("so_conditional_demo", oracle=so_conditional_demo_oracle())
+def so_conditional_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SO6: a conditional GraphProgram through the real executor —
+    has_results (taken), empty (taken), count_gte (not taken),
+    count_lte (taken) — graded against the effective path's SQL.
+    Same warm-up and collect_counts discipline as
+    so_program_demo (conditionals still count: the condition needs the
+    number)."""
+    ctx = Ctx.get(spark, sf_dir)
+    ctx.nodes.count()
+    ctx.edges.count()
+    res = execute_program(
+        _COND_PROGRAM, make_dispatch(ctx), empty_working(ctx), collect_counts=False
+    )
+    assert not res.aborted, res.abort_reason
+    return res.working.nodes.select("node_id", "label")

@@ -41,6 +41,8 @@ QUERIES: dict[str, QuerySpec] = {}
 
 def query(name: str, oracle: str | None = None):
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = QuerySpec(fn, oracle)
         return fn
 
@@ -51,7 +53,7 @@ class Ctx:
     """Per-(session, sf_dir) context: lazily built base tables + graph views."""
 
     _cache: dict[tuple[int, str], "Ctx"] = {}
-    # suite members / program statements may now build concurrently
+    # program statements and pipeline stages may build concurrently
     # (guide §2.6 overlap) — double-checked locks keep the per-session
     # context and its cached graph views single-instance under races
     _lock = threading.Lock()
@@ -130,259 +132,9 @@ class Ctx:
         return self._vocab
 
 
-# Driver-facing enumeration order. The driver records exactly the first
-# 50 registered queries — a prefix cutoff — against an 81-query
-# inventory (consolidated r7), so driver evidence alternates with ~19
-# free slots per round.
-#
-# STANDING ALTERNATION RULE (VERDICT r4 #1 — keep this every round):
-#   1. queries NEW this round first,
-#   2. then queries whose code or oracle CHANGED this round,
-#   3. then EVERY query whose last driver row is two rounds old
-#      (the previous round's non-window tail),
-#   4. bench headliners fill any remaining slots.
-# Invariant after each round: no registered query's most recent driver
-# row is older than ONE round. The tail (everything past slot 50) must
-# be exactly the set recorded last round (minus any query that was
-# consolidated away — see the r7 consolidation note below).
-#
-# EXECUTED-ROUND HISTORY (r8-r14 window plans, their executed notes,
-# and the superseded r11/r12/r13/r14 window lists) moved to
-# SCALE_NOTES.md appendix 'Registry window history' — VERDICT r12 next
-# #7 / r14 next #6 / r15 next #2: this block keeps only the LIVE plan
-# (the previous window list stays below as _RECORD_FIRST_R16 for the
-# union invariant the judge re-checks; exactly ONE in-repo history
-# list at a time — tests/test_registry_window.py asserts uniqueness).
-#
-# (r15 plan + executed notes folded to the SCALE_NOTES appendix in
-# r17 — the same rolling hygiene as r8-r14; the live block keeps the
-# current round, the immediately-previous round, and the forward
-# plans.)
-#
-# r16 PLAN (window math, execute next round — THIS patch encodes it):
-# the r15 tail is 45 rows (95 - 50, every registered row not in the
-# r15 window), all carrying r14 evidence that turns two rounds old in
-# r16 — all 45 must record. 50 - 45 = FIVE slack slots: apply
-# tools/patches/r16_quality_sum.patch first (t_quality_logreg's
-# mean_p -> sum_p6 — the row is IN the 45-row tail, so the change
-# rides free in the changed-first position), then the three
-# probe-gated queue rows (cur_bloom_decontaminate — bloom.py
-# registration + the `bloom` import; st_budget_stream —
-# budget_stream.py registration + the `budget_stream` import;
-# cur_ccnet_budget — classifier.py tail registration), leaving TWO
-# slack slots filled by bench headliners (g1_bfs_out_depth3,
-# q1_pricing_summary) per alternation-rule step 4. Registry after:
-# 95 + 3 = 98; the r17 tail is 48 (two slack). EXPECTED RED until the
-# driver grades: test_tail_has_recent_driver_evidence fails on the
-# r15-window rows until CORRECTNESS_r15.json exists — i.e. it heals
-# BEFORE any r16 session can apply this patch (the r14/r15 patch
-# precedent). Re-probe all three new rows at final r16 code before
-# committing; fold _RECORD_FIRST_R14 into SCALE_NOTES.
-#
-# r16 EXECUTED (this round, the plan above verbatim): both parked
-# patches applied and deleted (sum_p6 conversion on t_quality_logreg's
-# executed path + oracle; cur_bloom_decontaminate, st_budget_stream,
-# cur_ccnet_budget registered with `bloom`/`budget_stream` in
-# load_all); registry total 95 + 3 = 98; window below = exactly the
-# first 50 = 3 new + t_quality_logreg changed-first + the 44-row r15
-# tail + 2 bench headliners; r15 ∪ r16 covers all 98 (asserted by the
-# window tests). Registry hygiene executed per VERDICT r15 next #2:
-# the duplicated _RECORD_FIRST_R14 deleted, R14/R13 history lists and
-# the r14 plan/executed notes folded into the SCALE_NOTES appendix,
-# and test_registry_window.py now asserts exactly one in-repo history
-# list defined exactly once (AST scan).
-#
-# r17 PLAN (window math, execute next round — THIS patch encodes it):
-# the r16 tail is 48 rows (98 - 50, every registered row not in the
-# r16 window), all carrying r15 evidence that turns two rounds old in
-# r17 — all 48 must record. 50 - 48 = TWO slack slots, filled exactly
-# by the two probe-gated grid rows (smp_grid_quantiles — sampling.py
-# tail registration; st_grid_quantiles_stream — quantile_stream.py
-# registration + the `quantile_stream` import): ZERO slack, so no
-# other row's code or oracle may change in r17 unless it is already in
-# the tail. Registry after: 98 + 2 = 100. EXPECTED RED until the
-# driver grades: test_tail_has_recent_driver_evidence fails on the
-# r16-window rows until CORRECTNESS_r16.json exists — i.e. it heals
-# BEFORE any r17 session can apply this patch (the r14/r15/r16
-# precedent). Re-probe both rows at final r17 code before committing.
-# HYGIENE RIDER (the one-history-list rule): this patch deletes
-# _RECORD_FIRST_R15 — the r17 session must paste its content into the
-# SCALE_NOTES window-history appendix (it is in git history and in the
-# r16 commit either way); test_history_lists_defined_exactly_once
-# enforces the swap at apply time.
-#
-# r18 CAPACITY (plan ahead — the math is tight): after r17 the
-# registry is 100 and every future tail is EXACTLY 50 — zero slack
-# forever without consolidation. The r18 queue (st_ivf_ingest_stream,
-# st_bm25_stream, plus st_ccnet_stream from r16 and the lm_score →
-# lm_score_from_model fold whose consumers never share a tail under
-# strict alternation) therefore REQUIRES folds in r18. EXACT fold
-# arithmetic (NOTE: folding a row reduces the WINDOW count only when
-# that row is in the must-record tail; out-of-tail members just leave
-# the registry): the r18 tail is the r16 window's 50 rows. Fold ONE —
-# the sampling family (smp_quantile_global, smp_epoch_order,
-# smp_split_mix, smp_leakage_split, smp_weighted, smp_temperature_mix
-# — 6 always-green rows, one smp_suite, net -5; candidate
-# pre-validated hash-exact at both gate SFs,
-# tests/test_registry_window.py::test_r18_fold_candidate_smp_suite):
-# only smp_weighted + smp_temperature_mix are in the r18 tail, so
-# tail 50 -> 48. Fold TWO — an_suite (an_annealing_cycle +
-# an_execute_proposals, net -1, prepared since r10 and
-# driver-style tested ever since): BOTH members are r16-window rows,
-# so tail 48 -> 46. Window: 46 tail + an_suite + smp_suite +
-# st_ivf_ingest_stream + st_bm25_stream = EXACTLY 50, zero slack.
-# Registry after: 100 - 6 - 2 + 4 = 96; the r19 tail is 46, FOUR
-# slack — st_ccnet_stream (probe-gated r16: oracle MATCH sf0.01,
-# order-free parity suite, scheduling-bound decade) registers there,
-# leaving three for changed rows / new candidates. Pre-built as
-# tools/patches/r18_registrations.patch (apply ON TOP of the r17
-# patch after the r17 session's own edits land — regenerate from the
-# plan above if it no longer applies cleanly).
-#
-# r17 EXECUTED (this round, the plan above verbatim): patch applied +
-# deleted; both grid rows registered (with `quantile_stream` in
-# load_all) and re-probed MATCH at final r17 code; registry 98 + 2 =
-# 100; window below = 2 new + the 48-row r16 tail (zero slack);
-# r16 ∪ r17 covers all 100 (window tests). _RECORD_FIRST_R15 content
-# verified present in the SCALE_NOTES appendix (pre-pasted r16).
-# BEYOND THE PLAN, all render-identical or out-of-registry (the
-# zero-slack constraint honored): (1) the lm_score ->
-# lm_score_from_model and dsir Gumbel-tail folds landed EARLY
-# (VERDICT r16 next #2 overrode the r18-capacity fold timing below) —
-# legal because plan-identity is PROVEN, not assumed
-# (tests/test_lm_fold.py normalized-plan pins + the standing value
-# pins), so t_lm_quality / cur_ccnet_budget's executed plans are
-# byte-identical; the r18/r19 notes below that schedule "the lm_score
-# fold" are therefore ALREADY SATISFIED, and r19 shape (a) — register
-# all four queue rows — becomes the preferred r19 plan. (2) ADVICE
-# r16 all three: shard writes partitionBy(shard, slot) (collision-
-# proof file contract), the BM25 index persists n_buckets and refuses
-# mismatched serves, epoch_strata returns an explicit empty contract.
-# (3) curate_corpus optionally ends at the shard sink (VERDICT #4).
-_RECORD_FIRST = [
-    # ---- new (r17): the two probe-gated grid rows (exact fit)
-    "smp_grid_quantiles",
-    "st_grid_quantiles_stream",
-    # ---- the 48-row r16 tail (every registered row not in the r16
-    # window), enumeration order — all carry r15 evidence that turns
-    # two rounds old in r17
-    "q3_shipping_priority",
-    "a4_grounding",
-    "o1_ontology_edges",
-    "ep_status_measurement",
-    "smp_quantile_global",
-    "smp_epoch_order",
-    "d_exact_dedup",
-    "d_embedding_neardup",
-    "d_dup_groups",
-    "d_dedup_apply",
-    "d_embedding_groups",
-    "d_keeper_election",
-    "smp_leakage_split",
-    "smp_split_mix",
-    "d_semdedup",
-    "cur_budget_filter",
-    "t_ccnet_buckets",
-    "cur_dsir_select",
-    "g_butterflies",
-    "x2_skew_naive_join",
-    "x2_skew_salted_join",
-    "g1_bfs_both_depth2_conf",
-    "g2_shortest_path",
-    "g3_k_shortest_paths",
-    "g4_subgraph",
-    "a1_degree_top20",
-    "lc_related",
-    "lc_connect_by_search",
-    "f5_projection",
-    "f7_centroids",
-    "r_bm25_topk",
-    "t_corpus_filter",
-    "md_blocks",
-    "p7_guarded_query",
-    "src_jsonl_quarantine",
-    "st_spandedup_stream",
-    "a_scores_suite",
-    "j_enrich_suite",
-    "v_search_suite",
-    "t_textstats_suite",
-    "p_filter_matrix",
-    "st_windows_suite",
-    "f_catalog_suite",
-    "ann_suite",
-    "st_stream_suite",
-    "p7_cypher_suite",
-    "so_suite",
-    "cur_quality_suite",
-]
-
-# r16 window (history — the immediately-previous list, kept so the
-# "r16 ∪ r17 covers every registered row" union invariant stays
-# checkable in-repo; older lists live in SCALE_NOTES):
-_RECORD_FIRST_R16 = [
-    # ---- new (r16): the three probe-gated queue rows
-    "cur_bloom_decontaminate",
-    "st_budget_stream",
-    "cur_ccnet_budget",
-    # ---- changed (r16): t_quality_logreg's mean_p -> sum_p6
-    # integer-sum conversion (tools/patches/r16_quality_sum.patch
-    # applied) — already among the 45 must-record tail rows, so it
-    # rides free in the changed-first group per the rule
-    "t_quality_logreg",
-    # ---- the remaining 44-row r15 tail (every registered row not
-    # in the r15 window), enumeration order — all carry r14
-    # evidence that turns two rounds old in r16
-    "a2a3_confidence_score",
-    "a5_graph_stats",
-    "a6_category_distribution",
-    "a12_evidence_dedup",
-    "a13_best_chunk_per_source",
-    "a14_tfidf_naming",
-    "a15_lifetime_page",
-    "q5_supplier_volume",
-    "an_annealing_cycle",
-    "an_execute_proposals",
-    "x1_asof_join",
-    "x2_range_join",
-    "t_bpe_counts",
-    "smp_weighted",
-    "smp_temperature_mix",
-    "d_minhash_lsh",
-    "d_simhash",
-    "cur_pack_quota",
-    "cur_span_dedup",
-    "cur_pack_segments",
-    "cur_pack_bpe",
-    "s8_catalog_rebuild",
-    "d_semdedup_kmeans",
-    "t_cms_words",
-    "g_pagerank",
-    "g_communities",
-    "g_weighted_sssp",
-    "j1_evidence_join",
-    "j5_cross_ontology_affinity",
-    "t_lm_quality",
-    "f6_dbscan",
-    "u4_pruning_recommendations",
-    "t_hll_words",
-    "v1_vector_search",
-    "so_block_compiler",
-    "st_epoch_snapshot",
-    "sq_saved_query",
-    "s4_export_roundtrip",
-    "s6_gexf_fragments",
-    "pipe_curation_graded",
-    "st_contamination_stream",
-    "st_session_window",
-    "st_json_props",
-    "m_decode_suite",
-    # ---- slack (2): bench headliners per alternation-rule step 4
-    "g1_bfs_out_depth3",
-    "q1_pricing_summary",
-]
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import every operator module so its @query registrations run."""
+    """Import every operator module so its @query registrations run;
+    returns the registry in registration order."""
     from .operators import (  # noqa: F401
         aggregates,
         ann,
@@ -433,11 +185,4 @@ def load_all() -> dict[str, QuerySpec]:
         windows,
     )
 
-    # LAST: the consolidation suites capture member fns/oracles from
-    # QUERIES and then de-register the folded members, so every member
-    # module above must already have run its @query registrations
-    from .operators import suites  # noqa: F401
-
-    ordered = {n: QUERIES[n] for n in _RECORD_FIRST if n in QUERIES}
-    ordered.update({n: s for n, s in QUERIES.items() if n not in ordered})
-    return ordered
+    return QUERIES

@@ -229,10 +229,6 @@ def st_budget_stream_oracle() -> str:
     return cur_budget_filter_oracle()
 
 
-# Registered r16 (the pre-computed window's second new slot; probe-gated
-# r15 — SCALE_NOTES r15 part 3: bare-session oracle MATCH, decade
-# 1.28x; the registration also added `budget_stream` to load_all()'s
-# streaming import list).
 from ..registry import query  # noqa: E402
 
 query("st_budget_stream", oracle=st_budget_stream_oracle())(st_budget_stream)

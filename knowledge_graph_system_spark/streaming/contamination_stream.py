@@ -167,16 +167,13 @@ def st_contamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def st_contamination_stream_oracle() -> str:
-    # module function, not QUERIES["cur_contamination"]: the batch row
-    # folded into cur_quality_suite in r11 and left the registry
     from ..operators.curation import cur_contamination_oracle
 
     return cur_contamination_oracle()
 
 
-# r12 registration (the pre-computed window plan, registry.py). The
-# oracle is the SAME static SQL the batch row graded hash-exact with
-# through r10 — stream==batch parity is the claim being graded.
+# The oracle is the SAME static SQL as the batch row's —
+# stream==batch parity is the claim being graded.
 query(
     "st_contamination_stream", oracle=st_contamination_stream_oracle()
 )(st_contamination_stream)

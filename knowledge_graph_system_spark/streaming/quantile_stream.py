@@ -172,12 +172,6 @@ def st_grid_quantiles_stream_oracle() -> str:
     return smp_grid_quantiles_oracle()
 
 
-# Registered r17 (the pre-built window's second new slot; probe-gated
-# r15 — SCALE_NOTES r15 part 13 — and re-probed hash-exact at r16
-# final code: bare-session oracle MATCH at sf0.01, HUGEINT-clean,
-# decade 1.08x, the flattest streaming row in the ledger; the
-# registration also added `quantile_stream` to load_all()'s streaming
-# import list).
 from ..registry import query  # noqa: E402
 
 query("st_grid_quantiles_stream", oracle=st_grid_quantiles_stream_oracle())(

@@ -263,25 +263,19 @@ def test_expr_rejections():
 
 
 def test_registered_cypher_queries_still_run(spark):
-    """The 8 driver-graded cypher queries still compile and execute
-    after the parser swap (bit-level identity vs the DuckDB oracle is
-    pinned by tools/check_correctness.py; this is the fast in-suite
-    guard). Since the r11 consolidation the p7_cypher_* members are
-    driver-graded through p7_cypher_suite — exercise the suite's
-    captured member fns, which ARE the formerly registered fns."""
+    """The registered cypher queries still compile and execute after
+    the parser swap (bit-level identity vs the DuckDB oracle is pinned
+    by tools/check_correctness.py; this is the fast in-suite guard)."""
     from knowledge_graph_system_spark.registry import load_all
 
-    qs = load_all()  # imports every module in order, suites last
-    from knowledge_graph_system_spark.operators import suites
-
-    assert qs["p7_guarded_query"].fn(spark, SF_DIR).count() > 0
-    member_fns = {probe: fn for probe, fn, _oracle, _m in suites._P7_CAPTURED}
+    qs = load_all()
     for name in [
+        "p7_guarded_query",
         "p7_cypher_subset", "p7_cypher_varlen", "p7_cypher_trail",
         "p7_cypher_optional", "p7_cypher_with", "p7_cypher_union",
         "p7_cypher_unwind",
     ]:
-        assert member_fns[name](spark, SF_DIR).count() > 0, name
+        assert qs[name].fn(spark, SF_DIR).count() > 0, name
 
 
 def test_with_order_by_limit_topk(cctx):

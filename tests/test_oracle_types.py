@@ -100,15 +100,11 @@ def test_embedding_dim_consistent_across_oracles(con):
     # the three member oracles that hard-code the embedding dim in a
     # series expression (every other embedding oracle derives it from
     # len(v)); a generic numeric-literal sweep over-matches
-    # n-gram/shingle series, so the site list is explicit. Since the
-    # r15 ann_suite fold the members are no longer individually
-    # registered — their exact SQL is embedded verbatim as subqueries
-    # of the suite's oracle, so the pins are asserted there.
-    suite_oracle = specs["ann_suite"].oracle
+    # n-gram/shingle series, so the site list is explicit.
     dim_pinned = {
         "ann_ivf_topk": f"generate_series(1, {_DIM})",
         "ann_ivf_lifecycle": f"generate_series(1, {_DIM})",
         "ann_sq8_topk": f"range(1, {_DIM + 1})",
     }
     for name, needle in dim_pinned.items():
-        assert needle in suite_oracle, (name, needle)
+        assert needle in specs[name].oracle, (name, needle)

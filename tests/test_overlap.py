@@ -1,11 +1,9 @@
-"""Pins for the r17 §2.6 job-overlap internals: the parallel suite
-member build must be a pure scheduling change (same parts, same order,
-same rows), and the shared Ctx must stay single-instance under the
-concurrent builders that now race on it."""
+"""Pins for the §2.6 job-overlap internals: the shared Ctx must stay
+single-instance under concurrent builders, and the program executor's
+concurrent pre-dispatch must keep sequential semantics."""
 
 from __future__ import annotations
 
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -21,37 +19,6 @@ def spark():
     from knowledge_graph_system_spark.session import get_spark
 
     return get_spark("test-overlap", cpus=4, shuffle_partitions=4)
-
-
-def test_build_parts_preserves_order_rows_and_projection(spark):
-    """_build_parts runs member fns in a pool but must return frames in
-    captured order, each carrying its own probe tag and slot values —
-    byte-identical union shape to the sequential build."""
-    from knowledge_graph_system_spark.registry import load_all
-
-    load_all()  # suites.py needs the registry populated before import
-    from knowledge_graph_system_spark.operators.suites import _build_parts
-
-    def member(k: int):
-        def fn(s, sf_dir):
-            # stagger completion so pool scheduling CANNOT finish in
-            # submit order by accident
-            time.sleep(0.2 if k == 0 else 0.0)
-            return s.range(3).selectExpr(f"id + {k} AS v")
-
-        return fn
-
-    captured = [(f"m{k}", member(k), None, {"n1": "v"}) for k in range(5)]
-    parts = _build_parts(captured, spark, SF)
-    assert len(parts) == 5
-    for k, part in enumerate(parts):
-        rows = part.collect()
-        assert {r["probe"] for r in rows} == {f"m{k}"}
-        assert sorted(r["n1"] for r in rows) == [k, k + 1, k + 2]
-        # the projection contract: probe + the 9 typed slots
-        assert part.columns == [
-            "probe", "k1", "k2", "n1", "n2", "n3", "x1", "x2", "x3", "x4",
-        ]
 
 
 def test_ctx_single_instance_and_views_under_races(spark):

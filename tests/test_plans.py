@@ -74,12 +74,7 @@ def test_no_cartesian_products_anywhere(spark, specs):
         "v1_vector_search",
         "f7_centroids",
         "o1_ontology_edges",
-        # suites union members whose standalone rows carried the same
-        # allowance (a7/a8/a9/a11; j9; v2/v3/v6/v8) — see
-        # operators/suites.py for the member mapping
-        "a_scores_suite",
-        "j_enrich_suite",
-        "v_search_suite",
+        "a11_semantic_diversity",  # a<b inequality pair join, ≤100 neighbors
     }
     bad = []
     for name, spec in sorted(specs.items()):
@@ -107,10 +102,7 @@ def test_skew_naive_is_shuffle_salted_spreads(spark, specs):
 
 def test_multimodal_scans_prune_to_two_columns(spark):
     """mapInPandas decode paths must scan only (doc_id, text) — a scan
-    reading lang/source/n_chars for a 2-column decode is wrong. The
-    member fns live on in operators/multimodal.py after the r10
-    m_decode_suite consolidation (only their individual driver rows
-    were de-registered), so the pin targets the module fns."""
+    reading lang/source/n_chars for a 2-column decode is wrong."""
     from knowledge_graph_system_spark.operators.multimodal import (
         m_audio_decode,
         m_jpeg_decode,

@@ -1,0 +1,64 @@
+"""Registry contract: every row is its own registered query with its own
+oracle, and a name can be registered once only."""
+
+from __future__ import annotations
+
+import duckdb
+import pytest
+
+from knowledge_graph_system_spark.registry import load_all, query
+from tools.check_correctness import table_sig
+
+_TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
+
+# Driver-style compares at both gate scale factors for the multimodal
+# decode, annealing, streaming foreachBatch, Cypher, set-ops, ANN,
+# sampling and LM-quality families.
+_ORACLE_ROWS = [
+    "m_decode_features", "m_image_decode", "m_video_decode",
+    "m_audio_frames", "m_jpeg_decode", "m_audio_decode",
+    "an_annealing_cycle", "an_execute_proposals",
+    "st_ingest_e2e", "st_neardup_stream", "st_enrich_stream",
+    "st_hll_stream", "st_cms_stream",
+    "p7_cypher_subset", "p7_cypher_varlen", "p7_cypher_trail",
+    "p7_cypher_optional", "p7_cypher_union", "p7_cypher_unwind",
+    "p7_cypher_with", "p7_cypher_shortest",
+    "so_program_demo", "so_dispatch_matrix", "so_conditional_demo",
+    "ann_brute_topk", "ann_ivf_topk", "ann_ivf_persisted",
+    "ann_ivf_lifecycle", "ann_sq8_topk", "ann_pq_topk", "ann_ivfpq_topk",
+    "smp_quantile_global", "smp_epoch_order", "smp_split_mix",
+    "smp_leakage_split", "smp_weighted", "smp_temperature_mix",
+    "t_lm_quality", "t_ccnet_buckets", "cur_ccnet_budget",
+]
+
+
+@pytest.mark.parametrize("name", _ORACLE_ROWS)
+def test_row_matches_its_oracle(spark, name):
+    spec = load_all()[name]
+    assert spec.oracle is not None
+    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+        sdf = spec.fn(spark, sf)
+        scols = sdf.columns
+        srows = [[r[c] for c in scols] for r in sdf.collect()]
+        con = duckdb.connect()
+        for t in _TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+            )
+        res = con.execute(spec.oracle)
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+        con.close()
+        assert sorted(scols) == sorted(ocols), (sf, scols, ocols)
+        assert len(srows) > 0, sf
+        assert table_sig(scols, srows) == table_sig(ocols, orows), sf
+
+
+def test_duplicate_registration_raises():
+    first = load_all()["q1_pricing_summary"]
+    with pytest.raises(ValueError, match="already registered"):
+        query("q1_pricing_summary")(lambda spark, sf_dir: None)
+    assert load_all()["q1_pricing_summary"] is first

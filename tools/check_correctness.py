@@ -68,8 +68,7 @@ def main():
 
     import time
 
-    # registration order (the driver's enumeration order), not sorted:
-    # a prefix cutoff in the driver maps directly onto this sequence
+    # every registered row, in registration order
     failed, passed, skipped = [], [], []
     t_start = time.perf_counter()
     for name, spec in specs.items():

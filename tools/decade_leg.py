@@ -8,9 +8,8 @@ Runs `fn(spark, sf_dir)` through a noop sink at sf0.1 AND /tmp/kg_sf1
 prints best/median/all plus the single-thread cpu-probe envelope around
 the legs — the bench.py weather discipline applied to decade probes, so
 a loaded block is visible in the row itself (probe worst <0.14 is this
-host's quiet gate; ~0.11-0.12 is its idle constant). Complements
-tools/probe_candidate.py (which owns oracle fidelity + HUGEINT lint);
-use THIS for the SCALE_NOTES decade rows.
+host's quiet gate; ~0.11-0.12 is its idle constant). Oracle fidelity
+and the HUGEINT lint live in tools/check_correctness.py.
 """
 
 import importlib

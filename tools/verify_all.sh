@@ -4,35 +4,25 @@
 # the teacher trip-wires (seconds) before any expensive sweep runs.
 set -e
 cd /root/repo
-echo "=== 0/5 teacher trip-wires (fail fast — VERDICT r15 next #7) ==="
+echo "=== 0/4 teacher trip-wires (fail fast — VERDICT r15 next #7) ==="
 # Byte-stability pin first (pure-Python, instant): a constant edit to the
-# teacher formula must fail HERE, before any expensive Spark sweep can
-# silently re-window t_quality_logreg between probe runs.
+# teacher formula must fail HERE, before any expensive Spark sweep runs.
 python -m pytest tests/test_textstats.py::test_teacher_module_renders_historic_literals -q
 # Then the cross-module drift trip-wire (one small Spark job): DSIR's
 # resampling target must equal the classifier's teacher labels doc-by-doc.
-python - <<'PY'
-import sys; sys.path.insert(0, '/root/repo')
-from pyspark.sql import SparkSession
-from tools.probe_candidate import _teacher_drift_check
-spark = (SparkSession.builder.master('local[8]')
-         .appName('teacher-drift-tripwire').getOrCreate())
-spark.sparkContext.setLogLevel('ERROR')
-_teacher_drift_check(spark)
-spark.stop()
-PY
-echo "=== 1/5 graded gate (sf0.01, full registry) ==="
+python -m pytest tests/test_dsir.py::test_dsir_target_matches_graded_teacher -q
+echo "=== 1/4 graded gate (sf0.01, full registry) ==="
 python tools/check_correctness.py /root/testdata/sf0.01
-echo "=== 2/5 entry smoke ==="
+echo "=== 2/4 entry smoke ==="
 python -c "
 import sys; sys.path.insert(0,'/root/repo')
 import __spark_entry__ as E
 from knowledge_graph_system_spark.session import get_spark
 s = get_spark('smoke')
 print(len(E.entry(s).collect()), 'rows')"
-echo "=== 3/5 bench (sf0.1) ==="
+echo "=== 3/4 bench (sf0.1) ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py | tail -1
-echo "=== 4/5 bare-session sim (sf0.001) ==="
+echo "=== 4/4 bare-session sim (sf0.001) ==="
 python -c "
 import sys; sys.path.insert(0,'/root/repo')
 from pyspark.sql import SparkSession
@@ -40,10 +30,4 @@ s = SparkSession.builder.master('local[8]').getOrCreate()
 import __spark_entry__ as E
 print(sum(1 for n,f in E.queries().items()
           if f(s,'/root/testdata/sf0.001').count() >= 0), 'queries ran')"
-echo "=== 5/5 recording window ==="
-python -c "
-import sys; sys.path.insert(0,'/root/repo')
-from knowledge_graph_system_spark import registry
-names = list(registry.load_all())
-print(len(names), 'total; window head =', names[:10])"
 echo "ALL SURFACES GREEN"
