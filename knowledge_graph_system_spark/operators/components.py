@@ -39,39 +39,25 @@ from .dedup import (
 _CC_BROADCAST_MAX = 2_000_000
 
 
-# Pointer jumps per round (r18, VERDICT r17 next #5 — tried WITH the
-# prescribed per-jump materialization and measured REJECTED at sf0.1:
-# extra jumps cut the embedding graph's rounds only 11 -> 10 (its
-# convergence is bound by neighbor-min hops between the dup chains'
-# local minima, not by pointer-chain depth) while the added per-round
-# materialization jobs blew the wall up (9.7 s -> 118.6 s at 2 jumps).
-# The measured round-count lever that DID land is the delta frontier
-# below — per-round shuffle volume now follows the geometrically
-# shrinking changed set instead of staying edge-sized for all ~11
-# rounds. Kept at 1; the knob documents the experiment.
-_CC_JUMPS_PER_ROUND = 1
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "src",
     b_col: str = "dst",
     max_iter: int = 25,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every endpoint of `pairs`, component = min
     reachable node id.
 
     Each round: (1) neighbor-min — every node adopts the smallest label
-    among itself and its neighbors; (2) pointer jumps — every node then
-    adopts its label's label, `_CC_JUMPS_PER_ROUND` times (each jump
-    materialized; comp values only ever decrease toward the component
-    minimum, so extra jumps change the ROUND COUNT, never the fixpoint).
-    Runs to the exact fixpoint (checked with a changed-row count per
-    round; `max_iter` is a safety rail ~2·log₂ of any practical
-    component, not a truncation in practice — hitting it raises rather
-    than returning a wrong answer). `stats` (measurement hook, guide §1)
-    records the executed round count."""
+    among itself and its neighbors; (2) one pointer jump — every node
+    then adopts its label's label (comp values only ever decrease
+    toward the component minimum, so the jump changes the ROUND COUNT,
+    never the fixpoint; two materialized jumps per round were
+    measured at sf0.1 in r18: rounds 11 -> 10, wall 9.7 s -> 118.6 s).
+    Runs to the exact fixpoint (checked with a changed-row
+    count per round; `max_iter` is a safety rail ~2·log₂ of any
+    practical component, not a truncation in practice — hitting it
+    raises rather than returning a wrong answer)."""
     # checkpoint the pair plan ONCE before mirroring: the union's two
     # branches are separate evaluations of the same subtree, so an
     # expensive pair pipeline (LSH / IVF verify joins) ran twice inside
@@ -143,31 +129,20 @@ def connected_components(
             # join AND rebuilt inside the lookup's build (r17, §2.4)
             .localCheckpoint(eager=False)
         )
-        # pointer jumps: comp := label(comp) under the round's mapping,
-        # _CC_JUMPS_PER_ROUND times. Every jump after the first reads
-        # the PREVIOUS jump's materialized frame (eager checkpoint) —
-        # re-deriving the un-materialized broadcast chain per jump was
-        # the r17 triple-jump failure mode (30x). The final jump stays
-        # lazy: the changed-count below materializes it in the same job.
-        jumped = stepped
-        for j in range(_CC_JUMPS_PER_ROUND):
-            lookup = jumped.select(
-                F.col("node").alias("comp"), F.col("comp").alias("parent")
+        # pointer jump: comp := label(comp) under the round's mapping;
+        # lazy — the changed-count below materializes it in the same job
+        lookup = stepped.select(
+            F.col("node").alias("comp"), F.col("comp").alias("parent")
+        )
+        jumped = (
+            stepped.join(_side(lookup), "comp", "left")
+            .select(
+                "node",
+                "old",
+                F.least(F.col("comp"), F.coalesce("parent", F.col("comp"))).alias("comp"),
             )
-            jumped = (
-                jumped.join(_side(lookup), "comp", "left")
-                .select(
-                    "node",
-                    "old",
-                    F.least(
-                        F.col("comp"), F.coalesce("parent", F.col("comp"))
-                    ).alias("comp"),
-                )
-                # intermediate jumps eager (the next jump's lookup AND
-                # stream side read materialized partitions); the last
-                # jump lazy — the changed-count materializes it
-                .localCheckpoint(eager=j < _CC_JUMPS_PER_ROUND - 1)
-            )
+            .localCheckpoint(eager=False)
+        )
         # ONE job: the frontier's lazy checkpoint pulls the round's
         # jumped frame through its own lazy checkpoint while counting
         # the changed set (the count doubles as the convergence check)
@@ -178,9 +153,6 @@ def connected_components(
         )
         n_frontier = frontier.count()
         labels = jumped.select("node", "comp")
-        if stats is not None:
-            stats["rounds"] = stats.get("rounds", 0) + 1
-            stats.setdefault("frontier", []).append(n_frontier)
         if n_frontier == 0:
             return labels
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")

@@ -66,6 +66,30 @@ def _search_sources_linked(ctx: Ctx, hits: DataFrame, limit: int) -> DataFrame:
     )
 
 
+def _reach(
+    ctx: Ctx,
+    start: str,
+    depth: int,
+    direction: str,
+    rel_types: list[str] | None = None,
+) -> Result:
+    """BFS node set around `start` and its induced subgraph (the
+    `neighborhood` and `concepts_related` kinds)."""
+    from .traversal import bfs, subgraph
+
+    # eager checkpoint: the final BFS level is lazy and feeds the
+    # broadcast-guard count, the nodes join AND the induced subgraph —
+    # materialize once (r17, guide §1/§2.4)
+    nset = bfs(
+        ctx.edges, [start], depth, direction=direction, rel_types=rel_types
+    ).localCheckpoint(eager=True)
+    nodes = ctx.nodes.join(
+        maybe_broadcast(nset.select("node_id"), _REACH_BROADCAST_MAX, nset.count()),
+        "node_id",
+    )
+    return Result(nodes=nodes, links=subgraph(ctx.edges, nset))
+
+
 def make_dispatch(ctx: Ctx):
     def dispatch(source: dict) -> Result:
         kind = source["kind"]
@@ -183,24 +207,12 @@ def make_dispatch(ctx: Ctx):
             )
             return Result(nodes=nodes, links=links)
         if kind == "neighborhood":
-            from .traversal import bfs, subgraph
-
-            # eager checkpoint: the final BFS level is lazy and feeds the
-            # broadcast-guard count, the nodes join AND the induced
-            # subgraph — materialize once (r17, guide §1/§2.4)
-            nset = bfs(
-                ctx.edges,
-                [source["start"]],
+            return _reach(
+                ctx,
+                source["start"],
                 source.get("depth", 1),
-                direction=source.get("direction", "out"),
-            ).localCheckpoint(eager=True)
-            nodes = ctx.nodes.join(
-                maybe_broadcast(
-                    nset.select("node_id"), _REACH_BROADCAST_MAX, nset.count()
-                ),
-                "node_id",
+                source.get("direction", "out"),
             )
-            return Result(nodes=nodes, links=subgraph(ctx.edges, nset))
         if kind == "vector":
             from .vector import vector_search
 
@@ -292,24 +304,13 @@ def make_dispatch(ctx: Ctx):
             )
             return Result(nodes=own.unionByName(endpoints), links=out_edges)
         if kind == "concepts_related":
-            from .traversal import bfs, subgraph
-
-            # eager checkpoint, same shape as the `neighborhood` kind:
-            # one materialization feeds guard count + nodes + subgraph
-            nset = bfs(
-                ctx.edges,
-                [source["concept_id"]],
+            return _reach(
+                ctx,
+                source["concept_id"],
                 source.get("max_depth", 2),
-                direction=source.get("direction", "out"),
-                rel_types=source.get("relationship_types"),
-            ).localCheckpoint(eager=True)
-            nodes = ctx.nodes.join(
-                maybe_broadcast(
-                    nset.select("node_id"), _REACH_BROADCAST_MAX, nset.count()
-                ),
-                "node_id",
+                source.get("direction", "out"),
+                source.get("relationship_types"),
             )
-            return Result(nodes=nodes, links=subgraph(ctx.edges, nset))
         if kind == "concepts_batch":
             ids = source["concept_ids"]
             if not ids:

@@ -11,13 +11,39 @@ Reference semantics being reproduced (NOT the implementation):
 Spark-first design: the reference needed a Rust in-memory accelerator
 because Postgres/AGE traversal is row-at-a-time (92 s for depth-5 on a
 236-node graph — BASELINE.md). Here traversal is a loop of broadcast
-hash joins against a cached columnar edge DataFrame: the frontier is
-always the tiny side, so each hop is a map-side join with NO shuffle of
-the (potentially 100 TB) edge table; `visited` stays deduplicated per
-level. Depth is bounded like the reference bounds it (max_hops ≤ 10).
+hash joins against a cached columnar edge DataFrame, written once in
+`_expand` and shared by `bfs`, `bfs_paths`, `shortest_path_length` and
+`shortest_path`:
+
+- seed: a `local_df` of the start ids is level 0, the first frontier
+  and the first seen set;
+- step: the caller's join of the edge frame against the frontier,
+  minus the seen set (left anti-join). Both sides are counted, so
+  under `_BROADCAST_FRONTIER_MAX` they broadcast and the edge table is
+  never shuffled; past it the planner shuffles (`_frontier_side`);
+- lazy checkpoint plus probe: each level is a lazy local checkpoint
+  that ONE aggregate job materializes while returning the level's row
+  count (the next frontier's size) and, with `stop_at`, whether the
+  target was reached. `persist()` is not an option: CacheManager would
+  substitute the cached subtree into the next bench rep's identical
+  plan, cross-run result caching. The wave stops on an empty level or
+  a hit. A final level that feeds no further hop is left lazy and
+  unprobed unless the caller must read it (`probe_last`);
+- union: the seen set is the union of the already-checkpointed levels
+  (shallow lineage, so no lineage cut is needed), and `bfs`/`bfs_paths`
+  return the union of the levels.
+
+A fully fused single-plan variant (level_k = adj ⋈ level_{k-1} chained
+without checkpoints, the reference's fixed-chain idea) was measured
+SLOWER at depth 3: without materialization each level re-derives its
+predecessors, O(d²) edge scans vs O(d) here. Depth is bounded like the
+reference bounds it (max_hops ≤ 10).
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,10 +51,6 @@ from pyspark.sql import functions as F
 from ..functions.scale import local_df
 from ..registry import Ctx, query
 from ..sources.graph_view import graph_ctes
-
-# checkpoint cadence: cut lineage so deep traversals don't accumulate
-# a mile-long plan (replaces the reference's generation bookkeeping)
-_CHECKPOINT_EVERY = 4
 
 # above this frontier size, stop broadcasting and let the planner shuffle:
 # a 100 TB graph can saturate a hub-heavy frontier past driver memory
@@ -42,6 +64,52 @@ def _frontier_side(frontier: DataFrame, n: int | None) -> DataFrame:
     # (r18; no call site passes None today — this hardens the contract
     # for future ones).
     return F.broadcast(frontier) if n is not None and n <= _BROADCAST_FRONTIER_MAX else frontier
+
+
+# step(frontier, seen, depth) -> the level's frame: `frontier` is the
+# previous level with node_id renamed to src, `seen` the node_id set of
+# every earlier level; both arrive through `_frontier_side`.
+_Step = Callable[[DataFrame, DataFrame, int], DataFrame]
+
+
+def _expand(
+    seeds: DataFrame,
+    n_seeds: int,
+    max_depth: int,
+    step: _Step,
+    stop_at: str | None = None,
+    probe_last: bool = False,
+) -> tuple[list[DataFrame], bool]:
+    """The level loop (module docstring) → (levels, hit): levels[0] is
+    `seeds`, levels[d] the nodes first reached at depth d; an empty
+    level is not returned. `hit` is True when a probed level holds
+    `stop_at`; that level is the last one."""
+    levels = [seeds]
+    frontier, n_frontier = seeds, n_seeds
+    seen, n_seen = seeds.select("node_id"), n_seeds
+    probes = [F.count(F.lit(1)).alias("n")]
+    if stop_at is not None:
+        probes.append(F.max(F.when(F.col("node_id") == stop_at, 1).otherwise(0)).alias("hit"))
+    for depth in range(1, max_depth + 1):
+        level = step(
+            _frontier_side(frontier.withColumnRenamed("node_id", "src"), n_frontier),
+            _frontier_side(seen, n_seen),
+            depth,
+        )
+        if depth == max_depth and not probe_last:
+            levels.append(level)
+            break
+        level = level.localCheckpoint(eager=False)
+        stats = level.agg(*probes).first()
+        if stats["n"] == 0:
+            break
+        levels.append(level)
+        if stop_at is not None and stats["hit"] == 1:
+            return levels, True
+        frontier, n_frontier = level, stats["n"]
+        n_seen += n_frontier
+        seen = seen.unionByName(level.select("node_id"))
+    return levels, False
 
 
 def directed_edges(
@@ -70,6 +138,22 @@ def directed_edges(
     raise ValueError(f"direction must be out|in|both, got {direction!r}")
 
 
+def _new_nodes(adj: DataFrame) -> _Step:
+    """Level step of `bfs` and `shortest_path_length`: the frontier's
+    distinct unseen neighbors as (node_id, dist)."""
+
+    def step(frontier: DataFrame, seen: DataFrame, depth: int) -> DataFrame:
+        return (
+            adj.join(frontier, "src")
+            .select(F.col("dst").alias("node_id"))
+            .distinct()
+            .join(seen, "node_id", "left_anti")
+            .withColumn("dist", F.lit(depth).cast("int"))
+        )
+
+    return step
+
+
 def bfs(
     edges: DataFrame,
     start_ids: list[str],
@@ -81,87 +165,22 @@ def bfs(
 ) -> DataFrame:
     """BFS neighborhood ≤ max_depth → (node_id, dist) with min distance.
 
-    Each hop: edges ⋈ broadcast(frontier) → new frontier minus visited.
-    The edge table is never shuffled; per-hop cost is one broadcast of
-    the frontier id set (bounded like the reference bounds everything).
-
-    (A fully-fused single-plan variant — level_k = adj ⋈ level_{k-1}
-    chained without checkpoints, the reference's fixed-chain idea — was
-    measured SLOWER at depth 3: without materialization each level
-    branch re-derives its predecessors, O(d²) edge scans vs O(d) here.)
-
-    `stop_at` (r18, guide §2.4 — don't compute levels you throw away):
-    when set, the wave stops expanding after the level where that node
-    first appears (its min distance), so the returned map covers depths
-    0..dist(stop_at) instead of 0..max_depth. The target probe is fused
-    into the level count's aggregate — no extra job. Used by the
-    shortest-path corridor (`setops.path_to`), whose corridor members
-    all satisfy dist_fwd ≤ dist(from, to) by definition. A `stop_at`
-    among the seeds is at depth 0, so the seeds are returned unexpanded.
+    `stop_at` (guide §2.4 — don't compute levels you throw away): when
+    set, the wave stops expanding after the level where that node first
+    appears (its min distance), so the returned map covers depths
+    0..dist(stop_at) instead of 0..max_depth; the target probe rides the
+    level's count job. Used by the shortest-path corridor
+    (`setops.path_to`), whose corridor members all satisfy
+    dist_fwd ≤ dist(from, to) by definition. A `stop_at` among the seeds
+    is at depth 0, so the seeds are returned unexpanded.
     """
     spark = edges.sparkSession
-    adj = directed_edges(edges, direction, min_confidence, rel_types)
-    visited = local_df(spark, [(s, 0) for s in start_ids], "node_id string, dist int")
+    seeds = local_df(spark, [(s, 0) for s in start_ids], "node_id string, dist int")
     if stop_at is not None and stop_at in start_ids:
-        return visited
-    frontier = visited.select("node_id")
-    n_frontier: int | None = len(start_ids)
-    n_visited = len(start_ids)
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            adj.join(_frontier_side(frontier.withColumnRenamed("node_id", "src"), n_frontier), "src")
-            .select(F.col("dst").alias("node_id"))
-            .distinct()
-            # visited is counted (running sum of frontier counts): under
-            # the bound the anti-join broadcasts instead of the default
-            # SortMergeJoin LeftAnti, which exchanged AND sorted both
-            # sides every hop (r17, guide §2.4/§3.1)
-            .join(
-                _frontier_side(visited.select("node_id"), n_visited),
-                "node_id",
-                "left_anti",
-            )
-            .withColumn("dist", F.lit(depth).cast("int"))
-        )
-        if depth == max_depth:
-            # the final level feeds no further hop: let it flow lazily
-            # into the caller's single action (r17 — the bfs_paths shape)
-            visited = visited.unionByName(nxt)
-            break
-        # LAZY checkpoint + count: ONE job materializes the hop and
-        # returns the frontier size (the eager form paid a separate
-        # count job per hop). NOT persist(): CacheManager would
-        # substitute the cached subtree into the next bench rep's
-        # identical plan — cross-run result caching, which the bench
-        # methodology forbids.
-        nxt = nxt.localCheckpoint(eager=False)
-        if stop_at is not None:
-            # target probe fused into the materializing count (the
-            # shortest_path_length shape) — same single job per level
-            stats = nxt.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.when(F.col("node_id") == stop_at, 1).otherwise(0)).alias("hit"),
-            ).first()
-            n_frontier = stats["n"]
-            if n_frontier == 0:
-                break
-            visited = visited.unionByName(nxt)
-            if stats["hit"] == 1:
-                break
-            n_visited += n_frontier
-            if depth % _CHECKPOINT_EVERY == 0:
-                visited = visited.localCheckpoint(eager=True)
-            frontier = nxt.select("node_id")
-            continue
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        n_visited += n_frontier
-        visited = visited.unionByName(nxt)
-        if depth % _CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = nxt.select("node_id")
-    return visited
+        return seeds
+    adj = directed_edges(edges, direction, min_confidence, rel_types)
+    levels, _ = _expand(seeds, len(start_ids), max_depth, _new_nodes(adj), stop_at)
+    return reduce(DataFrame.unionByName, levels)
 
 
 def directed_edges_tagged(
@@ -213,36 +232,23 @@ def bfs_paths(
     array comparison. Array (not string-concat) comparison makes the
     greedy per-level choice equal the global minimum — a shorter id that
     is a prefix of a longer one ("C1" vs "C10") would invert under
-    string concatenation.
-
-    Same scale posture as `bfs`: per-hop broadcast of the frontier, edge
-    table never shuffled; the frontier rows now carry O(depth) arrays,
-    still bounded by the same frontier cap.
+    string concatenation. The frontier rows carry O(depth) arrays, still
+    bounded by the same frontier cap.
     """
     spark = edges.sparkSession
     adj = directed_edges_tagged(edges, direction, min_confidence, rel_types)
     empty_arr = F.array().cast("array<string>")
-    visited = local_df(spark, [(s,) for s in start_ids], "node_id string").select(
+    seeds = local_df(spark, [(s,) for s in start_ids], "node_id string").select(
         "node_id",
         F.lit(0).cast("int").alias("dist"),
         F.array("node_id").alias("key"),
         empty_arr.alias("ptypes"),
         empty_arr.alias("pdirs"),
     )
-    frontier = visited
-    n_frontier: int | None = len(start_ids)
-    n_visited = len(start_ids)
-    for depth in range(1, max_depth + 1):
+
+    def step(frontier: DataFrame, seen: DataFrame, depth: int) -> DataFrame:
         cand = (
-            adj.join(
-                _frontier_side(
-                    frontier.select(
-                        F.col("node_id").alias("src"), "key", "ptypes", "pdirs"
-                    ),
-                    n_frontier,
-                ),
-                "src",
-            )
+            adj.join(frontier, "src")
             .select(
                 F.col("dst").alias("node_id"),
                 F.concat(
@@ -251,16 +257,9 @@ def bfs_paths(
                 F.concat("ptypes", F.array("rel_type")).alias("ptypes"),
                 F.concat("pdirs", F.array("dir")).alias("pdirs"),
             )
-            # counted-broadcast anti-join (r17): replaces a per-level
-            # SortMergeJoin LeftAnti that exchanged + sorted the full
-            # candidate set AND the visited set (see bfs)
-            .join(
-                _frontier_side(visited.select("node_id"), n_visited),
-                "node_id",
-                "left_anti",
-            )
+            .join(seen, "node_id", "left_anti")
         )
-        chosen = cand.groupBy("node_id").agg(
+        return cand.groupBy("node_id").agg(
             F.min(F.struct("key", "ptypes", "pdirs")).alias("m")
         ).select(
             "node_id",
@@ -269,24 +268,9 @@ def bfs_paths(
             "m.ptypes",
             "m.pdirs",
         )
-        if depth == max_depth:
-            # the final level feeds no further hop: let it flow lazily
-            # into the caller's single action instead of materializing —
-            # one checkpoint job + one count job saved per traversal
-            visited = visited.unionByName(chosen)
-            break
-        # lazy checkpoint + count = ONE materialization job per level
-        # (see bfs for why persist() is not an option here)
-        chosen = chosen.localCheckpoint(eager=False)
-        n_frontier = chosen.count()
-        if n_frontier == 0:
-            break
-        n_visited += n_frontier
-        visited = visited.unionByName(chosen)
-        if depth % _CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = chosen
-    return visited.select(
+
+    levels, _ = _expand(seeds, len(start_ids), max_depth, step)
+    return reduce(DataFrame.unionByName, levels).select(
         "node_id",
         "dist",
         F.array_join("ptypes", ">").alias("path_types"),
@@ -312,50 +296,12 @@ def shortest_path_length(
     if src_id == dst_id:
         # the start node is reachable at distance 0 (reference BFS rule)
         return local_df(spark, [(src_id, dst_id, 0)], "src string, dst string, dist int")
-    found = None
+    seeds = local_df(spark, [(src_id, 0)], "node_id string, dist int")
     adj = directed_edges(edges, direction)
-    visited = local_df(spark, [(src_id, 0)], "node_id string, dist int")
-    frontier = visited.select("node_id")
-    # per-hop frontier is O(V) worst case (hub graphs) — counted guard,
-    # same policy as bfs's _frontier_side; the count is free (each
-    # hop's count() is already paid for the early-exit check)
-    n_frontier = 1
-    n_visited = 1
-    for depth in range(1, max_hops + 1):
-        nxt = (
-            adj.join(
-                _frontier_side(
-                    frontier.withColumnRenamed("node_id", "src"), n_frontier
-                ),
-                "src",
-            )
-            .select(F.col("dst").alias("node_id"))
-            .distinct()
-            # counted-broadcast anti-join, as in bfs (r17)
-            .join(
-                _frontier_side(visited.select("node_id"), n_visited),
-                "node_id",
-                "left_anti",
-            )
-            .localCheckpoint(eager=False)
-        )
-        # ONE job: materializes the lazy checkpoint and returns frontier
-        # size + target-hit flag (was three jobs: eager checkpoint,
-        # count, filter-count — r17, guide §1/§2.4)
-        stats = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.when(F.col("node_id") == dst_id, 1).otherwise(0)).alias("hit"),
-        ).first()
-        n_frontier = stats["n"]
-        if n_frontier == 0:
-            break
-        if stats["hit"] == 1:
-            found = depth
-            break
-        n_visited += n_frontier
-        visited = visited.unionByName(nxt.withColumn("dist", F.lit(depth).cast("int")))
-        frontier = nxt
-    rows = [(src_id, dst_id, found)] if found is not None else []
+    levels, hit = _expand(
+        seeds, 1, max_hops, _new_nodes(adj), stop_at=dst_id, probe_last=True
+    )
+    rows = [(src_id, dst_id, len(levels) - 1)] if hit else []
     return local_df(spark, rows, "src string, dst string, dist int")
 
 
@@ -374,51 +320,28 @@ def shortest_path(
         return [src_id]
     spark = edges.sparkSession
     adj = directed_edges(edges, direction)
-    visited = local_df(spark, [(src_id,)], "node_id string")
-    frontier = visited
-    n_frontier = 1  # counted frontier guard, as in shortest_path_length
-    n_visited = 1
-    levels: list[DataFrame] = []  # checkpointed (node_id, parent) per depth
-    for _ in range(max_hops):
-        step = (
-            adj.join(
-                _frontier_side(
-                    frontier.withColumnRenamed("node_id", "src"), n_frontier
-                ),
-                "src",
-            )
+
+    def step(frontier: DataFrame, seen: DataFrame, depth: int) -> DataFrame:
+        return (
+            adj.join(frontier, "src")
             .groupBy(F.col("dst").alias("node_id"))
             .agg(F.min("src").alias("parent"))  # deterministic parent choice
-            # counted-broadcast anti-join, as in bfs (r17)
-            .join(_frontier_side(visited, n_visited), "node_id", "left_anti")
-            .localCheckpoint(eager=False)
+            .join(seen, "node_id", "left_anti")
         )
-        # ONE job materializes + counts + probes the target (r17)
-        stats = step.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.when(F.col("node_id") == dst_id, 1).otherwise(0)).alias("hit"),
-        ).first()
-        n_frontier = stats["n"]
-        if n_frontier == 0:
-            return []
-        n_visited += n_frontier
-        levels.append(step)
-        if stats["hit"] == 1:
-            # walk back through the per-level parent tables: one 1-row
-            # lookup per depth — the tables themselves stay distributed
-            path = [dst_id]
-            for level in reversed(levels):
-                row = level.filter(F.col("node_id") == path[-1]).take(1)
-                if not row:
-                    break
-                path.append(row[0]["parent"])
-            return list(reversed(path))
-        frontier = step.select("node_id")
-        # no per-level eager checkpoint of visited: it is a union of
-        # already-checkpointed level frames (shallow lineage), so the
-        # checkpoint job per level bought nothing (r17)
-        visited = visited.unionByName(frontier)
-    return []
+
+    seeds = local_df(spark, [(src_id,)], "node_id string")
+    levels, hit = _expand(seeds, 1, max_hops, step, stop_at=dst_id, probe_last=True)
+    if not hit:
+        return []
+    # walk back through the per-level parent tables: one 1-row lookup
+    # per depth — the tables themselves stay distributed
+    path = [dst_id]
+    for level in reversed(levels[1:]):
+        row = level.filter(F.col("node_id") == path[-1]).take(1)
+        if not row:
+            break
+        path.append(row[0]["parent"])
+    return list(reversed(path))
 
 
 _PATH_BEAM_CAP = 10_000

@@ -540,7 +540,6 @@ def _shortest_pairs(
     lo: int,
     hi: int,
     state_max: int | None = None,
-    level_plans: list[str] | None = None,
 ) -> DataFrame:
     """(__src, __node, __plen): minimal hop count from each source to
     every node reachable within `hi` hops — multi-source BFS with
@@ -621,15 +620,6 @@ def _shortest_pairs(
             # batch-2 shape); past the bound the planner shuffles.
             .join(_frontier_side(seen, n_state), ["__src", "__node"], "left_anti")
         )
-        if level_plans is not None:
-            # measurement hook (guide §1): the executed per-level
-            # expansion plan, captured pre-checkpoint (the checkpointed
-            # frame explains as a bare RDD scan)
-            level_plans.append(
-                step._sc._jvm.PythonSQLUtils.explainString(
-                    step._jdf.queryExecution(), "formatted"
-                )
-            )
         # lazy checkpoint + count: ONE job materializes the level and
         # returns the frontier size (the eager form paid a separate
         # count job per level — r18, the traversal.py r17 shape)
@@ -672,7 +662,6 @@ def _shortest_pairs_adaptive(
     b_ids: DataFrame,
     lo: int,
     hi: int,
-    level_plans: list[str] | None = None,
 ) -> DataFrame:
     """Forward wave by default — byte-identical plan and cost for the
     common selective query (the unconditional bidir dispatch measured
@@ -683,10 +672,7 @@ def _shortest_pairs_adaptive(
     supersets of what `_compile_shortest`'s b-side join keeps, so the
     dispatch is invisible downstream."""
     try:
-        return _shortest_pairs(
-            ctx, edf, a_ids, lo, hi, state_max=_BIDIR_SWITCH,
-            level_plans=level_plans,
-        )
+        return _shortest_pairs(ctx, edf, a_ids, lo, hi, state_max=_BIDIR_SWITCH)
     except _StateOverflow:
         return _shortest_pairs_bidir(ctx, edf, a_ids, b_ids, lo, hi)
 
@@ -698,7 +684,6 @@ def _shortest_pairs_bidir(
     b_ids: DataFrame,
     lo: int,
     hi: int,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(__src, __node, __plen): the banded/bidirectional formulation of
     `_shortest_pairs`, restricted to the TARGET set — the r14 answer to
@@ -812,8 +797,6 @@ def _shortest_pairs_bidir(
         _probe(s, s["seen"])
         s["levels"] = [s["seen"].withColumn("__d", F.lit(0))]
         n_state += s["n_frontier"]
-        if stats is not None:
-            stats.setdefault("levels", []).append((name, 0, s["n_frontier"]))
     while sides["f"]["depth"] + sides["b"]["depth"] < hi:
         live = [s for s in sides.values() if s["n_frontier"] > 0]
         if not live:
@@ -834,10 +817,6 @@ def _shortest_pairs_bidir(
         )
         s["depth"] += 1
         _probe(s, nxt, need_cost=len(live) > 1)
-        if stats is not None:
-            stats.setdefault("levels", []).append(
-                (s["name"], s["depth"], s["n_frontier"])
-            )
         if s["n_frontier"] == 0:
             s["frontier"] = nxt
             continue
@@ -852,9 +831,6 @@ def _shortest_pairs_bidir(
         s["levels"].append(nxt.withColumn("__d", F.lit(s["depth"])))
         s["seen"] = s["seen"].unionByName(nxt).localCheckpoint(eager=True)
         s["frontier"] = nxt
-    if stats is not None:
-        stats["n_state"] = n_state
-        stats["depths"] = {n: s["depth"] for n, s in sides.items()}
     fwd = reduce(DataFrame.unionByName, sides["f"]["levels"]).select(
         F.col("__key").alias("__src"), "__node", F.col("__d").alias("__fd")
     )
@@ -868,14 +844,6 @@ def _shortest_pairs_bidir(
         .filter((F.col("__plen") >= lo) & (F.col("__plen") <= hi))
         .select("__src", F.col("__tgt").alias("__node"), "__plen")
     )
-
-
-# Measurement hook (guide §1): when set to a list, every executed
-# shortestPath() wave level appends its pre-checkpoint expansion plan
-# here (tools/capture_plans.py-style evidence for the per-level
-# exchanges, which never appear in the final frame's plan). None in
-# production — zero cost.
-_LEVEL_PLAN_SINK: list[str] | None = None
 
 
 def _compile_shortest(
@@ -962,9 +930,7 @@ def _compile_shortest(
     a_ids = a_frame.select(F.col("__ai").alias("__src")).distinct()
     b_frame = _node_frame(ctx, b).join(_dict(f"{b.var}__node_id", "__bi"), f"{b.var}__node_id")
     b_ids = b_frame.select(F.col("__bi").alias("__tgt")).distinct()
-    pairs = _shortest_pairs_adaptive(
-        ctx, edf, a_ids, b_ids, ep.lo, ep.hi, level_plans=_LEVEL_PLAN_SINK
-    )
+    pairs = _shortest_pairs_adaptive(ctx, edf, a_ids, b_ids, ep.lo, ep.hi)
     df = (
         a_frame.join(pairs, a_frame["__ai"] == pairs["__src"])
         .drop("__src", "__ai")

@@ -4,13 +4,16 @@ reference itself enforces, `graph-accel/docs/DESIGN.md:279-283`,
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from knowledge_graph_system_spark.operators.traversal import (
     bfs,
+    bfs_paths,
     degrees,
     directed_edges,
     enumerate_paths,
+    shortest_path,
     shortest_path_length,
     subgraph,
 )
@@ -312,3 +315,83 @@ def test_path_to_same_node_runs_no_expansion(ctx, monkeypatch):
     assert rows(fast.nodes) == rows(full.nodes)
     assert rows(fast.links) == rows(full.links)
     assert {r["node_id"] for r in fast.nodes.collect()} == {START}
+
+
+def _dispatch_nodes(ctx, source: dict):
+    from knowledge_graph_system_spark.operators import setops
+
+    return setops.make_dispatch(ctx)(source).nodes
+
+
+# (id, call, jobs of the per-loop traversal code this module replaced:
+# warm call, own job group, sf0.001, local[8]; identical at sf0.01 on
+# local[4]). Dispatch kinds are measured through `nodes.collect()`.
+_JOB_CEILINGS = [
+    ("bfs-C1-out-d2", lambda c: bfs(c.edges, [START], 2), 8),
+    ("bfs-P1-both-d1", lambda c: bfs(c.edges, ["P1"], 1, direction="both"), 3),
+    ("bfs-C1-out-d3", lambda c: bfs(c.edges, [START], 3), 13),
+    ("bfs-C1-out-d6", lambda c: bfs(c.edges, [START], 6), 19),
+    ("bfs-C1-out-d6-stop-S1", lambda c: bfs(c.edges, [START], 6, stop_at="S1"), 15),
+    ("bfs_paths-C1-out-d3", lambda c: bfs_paths(c.edges, [START], 3), 14),
+    (
+        "bfs_paths-S1-both-d2-conf",
+        lambda c: bfs_paths(c.edges, ["S1"], 2, direction="both", min_confidence=0.5),
+        9,
+    ),
+    ("spl-C1-S1-6", lambda c: shortest_path_length(c.edges, START, "S1", 6), 14),
+    ("spl-C1-S1-2-miss", lambda c: shortest_path_length(c.edges, START, "S1", 2), 9),
+    ("shortest_path-C1-S1", lambda c: shortest_path(c.edges, START, "S1"), 18),
+    (
+        "path_to-C1-S1",
+        lambda c: _dispatch_nodes(c, {"kind": "path_to", "from_id": START, "to_id": "S1"}),
+        43,
+    ),
+    (
+        "neighborhood-C1-d2",
+        lambda c: _dispatch_nodes(c, {"kind": "neighborhood", "start": START, "depth": 2}),
+        14,
+    ),
+    (
+        "concepts_related-C1-d2",
+        lambda c: _dispatch_nodes(
+            c, {"kind": "concepts_related", "concept_id": START, "max_depth": 2}
+        ),
+        14,
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "gid,call,ceiling", _JOB_CEILINGS, ids=[gid for gid, _, _ in _JOB_CEILINGS]
+)
+def test_traversal_job_count_ceiling(ctx, gid, call, ceiling):
+    """A warm traversal call runs no more Spark jobs than the hand-rolled
+    level loops did before they shared `_expand`, and returns the same
+    rows as its cold call."""
+
+    def run():
+        out = call(ctx)
+        return out if isinstance(out, list) else sorted(map(tuple, out.collect()))
+
+    cold = run()
+    warm, jobs = _run_in_group(ctx.spark.sparkContext, f"test-jobs-{gid}", run)
+    assert warm == cold
+    assert len(jobs) <= ceiling, (len(jobs), jobs)
+
+
+def test_target_at_exactly_max_hops(ctx):
+    """S1 is 3 hops from C1. shortest_path_length and shortest_path
+    probe the level at exactly max_hops (in as many jobs as a wave with
+    hops to spare), so they find S1 at max_hops=3 and nothing at 2; a
+    `stop_at` on bfs's final level leaves its rows unchanged."""
+    sc = ctx.spark.sparkContext
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    assert rows(shortest_path_length(ctx.edges, START, "S1", 3)) == [(START, "S1", 3)]
+    assert rows(shortest_path_length(ctx.edges, START, "S1", 2)) == []
+    path3 = shortest_path(ctx.edges, START, "S1", 3)
+    assert len(path3) == 4 and path3[0] == START and path3[-1] == "S1"
+    assert shortest_path(ctx.edges, START, "S1", 2) == []
+    _, jobs3 = _run_in_group(sc, "test-spl-hops3", lambda: shortest_path(ctx.edges, START, "S1", 3))
+    _, jobs6 = _run_in_group(sc, "test-spl-hops6", lambda: shortest_path(ctx.edges, START, "S1", 6))
+    assert len(jobs3) == len(jobs6)
+    assert rows(bfs(ctx.edges, [START], 3, stop_at="S1")) == rows(bfs(ctx.edges, [START], 3))

@@ -4,25 +4,27 @@
 # the teacher trip-wires (seconds) before any expensive sweep runs.
 set -e
 cd /root/repo
-echo "=== 0/4 teacher trip-wires (fail fast — VERDICT r15 next #7) ==="
+echo "=== 0/5 teacher trip-wires (fail fast — VERDICT r15 next #7) ==="
 # Byte-stability pin first (pure-Python, instant): a constant edit to the
 # teacher formula must fail HERE, before any expensive Spark sweep runs.
 python -m pytest tests/test_textstats.py::test_teacher_module_renders_historic_literals -q
 # Then the cross-module drift trip-wire (one small Spark job): DSIR's
 # resampling target must equal the classifier's teacher labels doc-by-doc.
 python -m pytest tests/test_dsir.py::test_dsir_target_matches_graded_teacher -q
-echo "=== 1/4 graded gate (sf0.01, full registry) ==="
+echo "=== 1/5 graded gate (sf0.01, full registry) ==="
 python tools/check_correctness.py /root/testdata/sf0.01
-echo "=== 2/4 entry smoke ==="
+echo "=== 2/5 entry smoke ==="
 python -c "
 import sys; sys.path.insert(0,'/root/repo')
 import __spark_entry__ as E
 from knowledge_graph_system_spark.session import get_spark
 s = get_spark('smoke')
 print(len(E.entry(s).collect()), 'rows')"
-echo "=== 3/4 bench (sf0.1) ==="
+echo "=== 3/5 perfbench smoke (every interactive template vs its oracle, sf0.001) ==="
+python3 perfbench/smoke.py
+echo "=== 4/5 bench (sf0.1) ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py | tail -1
-echo "=== 4/4 bare-session sim (sf0.001) ==="
+echo "=== 5/5 bare-session sim (sf0.001) ==="
 python -c "
 import sys; sys.path.insert(0,'/root/repo')
 from pyspark.sql import SparkSession
