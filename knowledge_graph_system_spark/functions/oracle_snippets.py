@@ -27,23 +27,8 @@ def l2_norm_sql(arr: str) -> str:
     return f"sqrt(list_sum(list_transform({arr}, x -> x * x)))"
 
 
-def normalize_sql(arr: str, norm: str) -> str:
-    return f"list_transform({arr}, x -> x / {norm})"
-
-
 def dot_sql(a: str, b: str) -> str:
     return f"list_dot_product({a}, {b})"
-
-
-def cosine_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / nullif("
-        f"sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})), 0)"
-    )
-
-
-def to_double_array_sql(arr: str) -> str:
-    return f"{arr}::DOUBLE[]"
 
 
 def unit_vec_cte(seed_expr: str, key_cols: str, from_clause: str, dim: int = DEFAULT_DIM) -> str:

@@ -37,14 +37,6 @@ def raw_vec_expr(seed_col: str, dim: int = DEFAULT_DIM) -> Column:
     )
 
 
-def l2_norm_expr(arr: str) -> Column:
-    return F.expr(f"sqrt(aggregate({arr}, 0D, (acc, x) -> acc + x * x))")
-
-
-def normalize_expr(arr: str, norm: str) -> Column:
-    return F.expr(f"transform({arr}, x -> x / {norm})")
-
-
 def dot_expr(a: str, b: str) -> Column:
     """Dot product of two array<double> columns, left-fold order."""
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
@@ -57,11 +49,6 @@ def cosine_expr(a: str, b: str) -> Column:
         f" / nullif(sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
         f" * sqrt(aggregate({b}, 0D, (acc, x) -> acc + x * x)), 0D)"
     )
-
-
-def to_double_array(arr: str) -> Column:
-    """Cast array<float> → array<double> so Spark and DuckDB do identical math."""
-    return F.expr(f"transform({arr}, x -> cast(x as double))")
 
 
 def unit_vec_py(seed: str, dim: int = DEFAULT_DIM) -> list[float]:

@@ -542,11 +542,11 @@ def stratified_budget_filter(
 
 
 def ccnet_cut_rollup(sd: DataFrame) -> DataFrame:
-    """The CCNet selection tail shared by the batch row and its
-    streaming twin: head-weighted per-tercile token budgets (60/30/10
-    of each stratum's own token mass) -> stratified cut ranked by the
-    LM score -> per-bucket rollup (bucket, n_kept, kept_tokens,
-    sum_logp4, min_logp). `sd` = (doc_id, bucket, lm_logp, n_tokens).
+    """The CCNet selection tail of `cur_ccnet_budget`: head-weighted
+    per-tercile token budgets (60/30/10 of each stratum's own token
+    mass) -> stratified cut ranked by the LM score -> per-bucket rollup
+    (bucket, n_kept, kept_tokens, sum_logp4, min_logp).
+    `sd` = (doc_id, bucket, lm_logp, n_tokens).
     sum_logp4 is the exact integer sum of the 4-dp LM scores x 10^4
     (the sum_p6 tie-safe discipline)."""
     frac = (
@@ -572,7 +572,7 @@ def ccnet_cut_rollup(sd: DataFrame) -> DataFrame:
 
 def cur_ccnet_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r16 row: CCNet terciles (graded t_ccnet_buckets machinery) ->
-    the shared ccnet_cut_rollup tail (per-tercile budgets, stratified
+    the ccnet_cut_rollup tail (per-tercile budgets, stratified
     cut, per-bucket rollup). n_tokens derives as n_bigrams + 1 — exact
     for this corpus because the fixture pins every document <= 600
     words and lm_score drops <2-word docs (the lm_score_sql bound

@@ -129,12 +129,9 @@ def gumbel_perturbed_scores(docs_dim: DataFrame, w: DataFrame) -> DataFrame:
     noise g = -ln(-ln(u)) — u derived from the md5 bucket of doc_id, so
     both engines agree bit-for-bit — to a per-doc weight frame and emit
     the resampling score w + g (4 dp each). THE single source of the
-    Gumbel expressions since the r17 fold (VERDICT r16 next #2): both
-    the fused batch path (`dsir_scores`) and the streaming drained-log
-    path (`streaming/dsir_stream.py::scores_from_state`) delegate here.
-    Byte-stability vs the pre-fold inline tails is pinned by
-    tests/test_lm_fold.py; value parity by tests/test_dsir_stream.py::
-    test_scores_from_state_matches_batch."""
+    Gumbel expressions since the r17 fold (VERDICT r16 next #2): the
+    fused batch path (`dsir_scores`) delegates here. Byte-stability vs
+    the pre-fold inline tail is pinned by tests/test_lm_fold.py."""
     u = (
         F.conv(
             F.substring(

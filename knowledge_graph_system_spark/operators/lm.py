@@ -148,9 +148,8 @@ def lm_score_from_model(
     k: float = SMOOTH_K,
 ) -> DataFrame:
     """`lm_score` against a PRE-TRAINED model (the persisted-count-frame
-    deployment the module docstring describes, and the shape the
-    streaming stratified-selection leg needs: the model is trained once
-    on a corpus build, then arriving documents score row-locally
+    deployment the module docstring describes: the model is trained
+    once on a corpus build, then arriving documents score row-locally
     against the broadcast frames).
 
     SINGLE SOURCE of the scoring expressions since the r17 fold
@@ -158,7 +157,7 @@ def lm_score_from_model(
     add-k-smoothed join/select/aggregate below is the only rendering of
     the formula in the repo. This body must stay byte-identical to the
     pre-fold inline tail — tests/test_lm_fold.py pins the normalized
-    plan against a frozen copy, and tests/test_stratified_stream.py::
+    plan against a frozen copy, and tests/test_lm.py::
     test_lm_score_from_model_matches_self_trained pins the values
     (the teacher-formula trip-wire discipline)."""
     docs = _fan_out(docs)

@@ -34,8 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scale import local_df
-
 K1 = 1.2
 B = 0.75
 
@@ -50,8 +48,8 @@ def build_postings(
 
     postings = (doc_id, term, tf); lengths = (doc_id, dl). At 100 TB
     these are built ONCE (optionally restricted to a vocabulary),
-    written bucketed by term, and served to every query — the per-query
-    plan then starts from an indexed scan instead of a corpus explode.
+    written, and served to every query — the per-query plan then
+    starts from a scan of them instead of a corpus explode.
     `bm25_search` composes exactly these builders inline for the
     build-and-query-in-one-pass case."""
     base = docs.select(
@@ -99,173 +97,6 @@ def bm25_from_postings(
     scored = (
         with_df.join(lengths, "doc_id")
         .crossJoin(F.broadcast(corpus))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (F.lit(k1) + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.round(F.sum("term_score"), 6).alias("score"),
-            F.count("*").alias("n_hit_terms"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(top_k)
-    )
-
-
-def persist_postings(
-    docs: DataFrame,
-    path: str,
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-) -> None:
-    """Build and persist the FULL BM25 index, term-bucketed (VERDICT r15
-    next #6 / SCALE_NOTES r15 part 15 made real): the production shape
-    for a 100 TB corpus, where the one-pass `bm25_search` corpus explode
-    per query is unaffordable and the registered row's query-vocabulary
-    restriction doesn't apply (the index must serve ANY future query).
-
-    Layout under `path`:
-      postings/  (doc_id, term, tf, dl) partitioned by
-                 bucket = pmod(xxhash64(term), n_buckets) — a query
-                 reads only its terms' buckets (partition pruning), and
-                 dl is DENORMALIZED into the posting rows so serving
-                 never joins the corpus-sized lengths frame (the
-                 standard posting-list shape: doc length travels with
-                 the posting).
-      terms/     (term, df) partitioned by the same bucket — the
-                 dictionary; df precomputed at build time so serving
-                 needs no window over hits.
-      stats/     one row (n_docs, avgdl, n_buckets) — corpus globals
-                 plus the bucketing parameter, persisted so a serve
-                 can never prune with a mismatched bucket count
-                 (ADVICE r16: a silently-wrong n_buckets at serve time
-                 would prune the wrong directories and return
-                 incomplete results; now the index self-describes).
-
-    Scale shape: ONE corpus explode + one (doc_id, term) groupBy
-    shuffle at BUILD time — dl rides the exploded rows and aggregates
-    with first() (constant within the group by construction), so there
-    is NO corpus-sized postings ⋈ lengths join: at 100 TB that join
-    would shuffle the corpus twice to attach a value already known per
-    row. Per-query cost afterwards is O(hit postings in the probed
-    buckets), i.e. ~|query terms| / n_buckets of the index, never the
-    corpus."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("__words"),
-    )
-    lengths = base.select("doc_id", F.size("__words").cast("bigint").alias("dl"))
-    postings = (
-        base.select(
-            "doc_id",
-            F.size("__words").cast("bigint").alias("dl"),
-            F.explode("__words").alias("term"),
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-    )
-    bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("bucket")
-    (
-        postings.select("doc_id", "term", "tf", "dl", bucket)
-        .write.mode(mode)
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    (
-        postings.groupBy("term")
-        .agg(F.count("*").cast("bigint").alias("df"))
-        .select("term", "df", bucket)
-        .write.mode(mode)
-        .partitionBy("bucket")
-        .parquet(f"{path}/terms")
-    )
-    (
-        lengths.agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
-        .withColumn("n_buckets", F.lit(n_buckets).cast("bigint"))
-        .write.mode(mode)
-        .parquet(f"{path}/stats")
-    )
-
-
-def bm25_from_index(
-    spark,
-    path: str,
-    query_terms: list[str],
-    top_k: int = 10,
-    n_buckets: int | None = None,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Serve a BM25 query from a `persist_postings` index: identical
-    arithmetic (and results — pinned by test) to `bm25_search`, but the
-    scan is pruned to the query terms' buckets instead of exploding the
-    corpus.
-
-    The terms' buckets are computed with the SAME JVM xxhash64 the
-    writer used, on a |terms|-row frame (bounded collect), so the
-    postings read carries `bucket IN (...)` as a partition filter —
-    directory-level pruning, no index-wide scan.
-
-    `n_buckets` is read from the index's own stats frame (persisted at
-    build time — ADVICE r16); passing it explicitly is only an
-    assertion, and a mismatch fails LOUDLY instead of pruning the
-    wrong directories and silently returning incomplete results."""
-    terms = [t for t in query_terms if t]
-    if not terms:
-        raise ValueError("bm25_from_index needs at least one query term")
-    stats = spark.read.parquet(f"{path}/stats")
-    built_with = stats.select("n_buckets").first()["n_buckets"]
-    if n_buckets is not None and n_buckets != built_with:
-        raise ValueError(
-            f"index at {path} was built with n_buckets={built_with}, "
-            f"serve asked for {n_buckets} — pruning would read the "
-            "wrong bucket directories"
-        )
-    n_buckets = int(built_with)
-    buckets = sorted(
-        {
-            r[0]
-            for r in local_df(spark, [(t,) for t in terms], "term string")
-            .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-            .collect()
-        }
-    )
-    hits = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-    )
-    dictionary = (
-        spark.read.parquet(f"{path}/terms")
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select("term", "df")
-    )
-    scored = (
-        hits.join(F.broadcast(dictionary), "term")
-        .crossJoin(F.broadcast(stats.select("n_docs", "avgdl")))
         .withColumn(
             "idf",
             F.log(
@@ -382,29 +213,3 @@ def r_bm25_topk(spark, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject top-k)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return bm25_search(docs, _BM25_QUERY, top_k=20)
-
-
-def r_bm25_index_topk(spark, sf_dir: str) -> DataFrame:
-    """r19 candidate (prepared r16): the PERSISTED-INDEX serving path
-    as a driver row — build the term-bucketed full-postings index to a
-    driver-local tempdir (the ann_ivf_persisted precedent: the graded
-    row exercises build + pruned serve in one slot), serve the
-    registered three-term query from it, and grade against the SAME
-    bm25_sql oracle as the fused row (identical arithmetic by
-    construction, so one oracle pins both execution paths)."""
-    import shutil
-    import tempfile
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tmp = tempfile.mkdtemp(prefix="kg_bm25_index_")
-    try:
-        persist_postings(docs, tmp, n_buckets=64)
-        return bm25_from_index(
-            spark, tmp, _BM25_QUERY, top_k=20, n_buckets=64
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def r_bm25_index_topk_oracle() -> str:
-    return bm25_sql("documents", _BM25_QUERY, top_k=20)

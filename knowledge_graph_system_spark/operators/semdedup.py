@@ -344,8 +344,7 @@ def kmeans_codebook(
     vec_ids, `iters` assignment/mean sweeps, 12-dp-rounded recomputed
     means, empty clusters carrying forward. BOUNDED COLLECTS: k seed
     rows once, then k·D mean rows per sweep (the FAISS posture — the
-    trained codebook itself must be driver-sized, which is also why
-    production trains on a SAMPLE: operators/kmeans_scale.py)."""
+    trained codebook itself must be driver-sized)."""
     if dim is None:
         dim = len(vectors.select("v").first()["v"])
     seeds = sorted(

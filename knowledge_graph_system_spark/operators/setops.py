@@ -83,11 +83,12 @@ def _reach(
     nset = bfs(
         ctx.edges, [start], depth, direction=direction, rel_types=rel_types
     ).localCheckpoint(eager=True)
+    n_ids = nset.count()
     nodes = ctx.nodes.join(
-        maybe_broadcast(nset.select("node_id"), _REACH_BROADCAST_MAX, nset.count()),
+        maybe_broadcast(nset.select("node_id"), _REACH_BROADCAST_MAX, n_ids),
         "node_id",
     )
-    return Result(nodes=nodes, links=subgraph(ctx.edges, nset))
+    return Result(nodes=nodes, links=subgraph(ctx.edges, nset, n_ids))
 
 
 def make_dispatch(ctx: Ctx):
@@ -163,7 +164,8 @@ def make_dispatch(ctx: Ctx):
             # edges only (both endpoints have dfw ≤ dd) — checkpointed
             # once so every backward level reads the tiny materialized
             # frame instead of re-scanning the corpus edge table
-            sub = subgraph(ctx.edges, fwd).localCheckpoint(eager=True)
+            n_fwd = fwd.count()
+            sub = subgraph(ctx.edges, fwd, n_fwd).localCheckpoint(eager=True)
             bwd = (
                 bfs(sub, [source["to_id"]], dd, direction="in")
                 .select("node_id", F.col("dist").alias("_dbw"))
@@ -174,7 +176,7 @@ def make_dispatch(ctx: Ctx):
                 .filter(F.col("_dfw") + F.col("_dbw") == dd)
                 .select("node_id")
             )
-            n_fwd, n_bwd = fwd.count(), bwd.count()
+            n_bwd = bwd.count()
             # corridor ⊆ fwd ∩ bwd, so min(n_fwd, n_bwd) bounds its size
             # — reusing the two counts avoids a third job; past the
             # bound AQE still converts small builds at runtime

@@ -471,15 +471,15 @@ def yen_k_shortest(
     return accepted
 
 
-def subgraph(edges: DataFrame, node_set: DataFrame) -> DataFrame:
+def subgraph(edges: DataFrame, node_set: DataFrame, n_ids: int) -> DataFrame:
     """Edges whose BOTH endpoints are in node_set (G4) — double
     semi-join; node_set hinted into both joins WHILE COUNTED (r11
     sweep: node sets from BFS are O(reach), the frontier defect class),
-    edge table untouched by shuffle under the bound. One count serves
-    both hints (BFS outputs arrive checkpointed)."""
-    # lazy checkpoint + count: one materialization job (r17)
-    ids = node_set.select("node_id").localCheckpoint(eager=False)
-    n_ids = ids.count()
+    edge table untouched by shuffle under the bound. `n_ids` is
+    node_set's row count, which every caller takes where it builds and
+    checkpoints the set, so one count serves both hints and subgraph
+    itself runs no job."""
+    ids = node_set.select("node_id")
     return (
         edges.join(
             _frontier_side(ids.withColumnRenamed("node_id", "src"), n_ids),
@@ -661,9 +661,11 @@ def g4_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS node set → induced edge multiset (grouped with multiplicity so
     the comparison is order-insensitive over a multigraph)."""
     ctx = Ctx.get(spark, sf_dir)
-    nset = bfs(ctx.edges, [_START], 2, direction="out")
+    # lazy checkpoint + count: one materialization job, and the
+    # subgraph joins read the checkpoint, not the union of BFS levels
+    nset = bfs(ctx.edges, [_START], 2, direction="out").localCheckpoint(eager=False)
     return (
-        subgraph(ctx.edges, nset)
+        subgraph(ctx.edges, nset, nset.count())
         .groupBy("src", "dst", "rel_type", F.round("confidence", 6).alias("confidence"))
         .agg(F.count("*").alias("multiplicity"))
     )

@@ -15,7 +15,7 @@ Reference behavior being reproduced:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -47,13 +47,6 @@ def vector_search(
         .orderBy(F.col(sim_col).desc(), F.col("node_id"))
         .limit(k)
     )
-
-
-def smell_test(sim_a: Column, sim_b: Column) -> Column:
-    """Cognitive-leap tiers per `/root/reference/api/app/lib/age_client/
-    query.py:184-275`: avg similarity ≥0.85 LOW, ≥0.70 MEDIUM, else HIGH."""
-    avg = F.round((sim_a + sim_b) / 2.0, 6)
-    return F.when(avg >= 0.85, "LOW").when(avg >= 0.70, "MEDIUM").otherwise("HIGH")
 
 
 # ---------------------------------------------------------------------------

@@ -252,16 +252,6 @@ def _matches_outside_braces(s: str, pat: re.Pattern) -> list[re.Match]:
     ]
 
 
-def _split_outside_braces(s: str, sep: re.Pattern) -> list[str]:
-    cuts = _matches_outside_braces(s, sep)
-    out, pos = [], 0
-    for m in cuts:
-        out.append(s[pos : m.start()])
-        pos = m.end()
-    out.append(s[pos:])
-    return [p.strip() for p in out]
-
-
 def _matches_outside_literals(s: str, pat: re.Pattern) -> list[re.Match]:
     spans = _literal_spans(s)
     return [

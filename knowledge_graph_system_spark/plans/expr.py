@@ -767,9 +767,3 @@ def compile_expr(scope, text: str, allow_agg: bool = False) -> tuple[Column, boo
             f"expression is not supported: {text!r}"
         )
     return col, p.agg_count > 0
-
-
-def compile_bool(scope, text: str) -> Column:
-    """Compile a WHERE/HAVING-style boolean expression (no aggregates)."""
-    col, _ = compile_expr(scope, text, allow_agg=False)
-    return col

@@ -24,9 +24,8 @@ Design, Spark-first:
   input partitioning (no tiny-files explosion at 100 TB, no single
   giant file either; size file slots so a file is a few hundred MB).
 - The MANIFEST is a tiny groupBy(shard) aggregate written next to the
-  data; `cur_shard_manifest`-style consumers grade on it because it
-  exactly accounts for every row and token the writer emitted (the
-  accounting test reads the SHARD FILES back and re-derives it).
+  data; it exactly accounts for every row and token the writer emitted
+  (the accounting test reads the SHARD FILES back and re-derives it).
 """
 
 from __future__ import annotations
@@ -34,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.sampling import bucket_sql, hash_bucket
+from ..operators.sampling import hash_bucket
 
 _BUCKETS = 10_000  # hash_bucket's range (sampling._BUCKETS)
 
@@ -53,11 +52,6 @@ def shard_assign(
     return df.withColumn(
         "shard", (hash_bucket(F.col(key), salt) % n_shards).cast("bigint")
     )
-
-
-def shard_sql(key_sql: str, n_shards: int, salt: str = "shard") -> str:
-    """DuckDB rendering of shard_assign's bucket (oracle parity)."""
-    return f"({bucket_sql(key_sql, salt)}) % {n_shards}"
 
 
 def manifest_of(sharded: DataFrame, tokens_col: str = "n_tokens") -> DataFrame:
@@ -126,69 +120,3 @@ def write_training_shards(
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(f"{path}/manifest")
-
-
-def cur_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r19/r20 candidate: the full sink exercised in one gradeable slot
-    (the ann_ivf_persisted precedent — build + write + read-back):
-    greedy-pack the documents table (the graded cur_pack machinery's
-    shape), WRITE 8 shards x 2 files to a driver-local tempdir, and
-    return the manifest READ BACK from disk joined with a re-derivation
-    from the written shard files — so the graded row proves the
-    persisted artifact accounts for every sequence and token."""
-    import shutil
-    import tempfile
-
-    from ..operators.curation import greedy_pack
-    from ..registry import Ctx
-
-    docs = Ctx.get(spark, sf_dir).tables["documents"]
-    packed = greedy_pack(docs, seq_len=1024, n_groups=16)
-    tmp = tempfile.mkdtemp(prefix="kg_shards_")
-    try:
-        manifest = write_training_shards(
-            packed, tmp, n_shards=8, files_per_shard=2
-        )
-        from_files = (
-            spark.read.parquet(f"{tmp}/data")
-            .groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_seqs_files"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens_files"),
-            )
-        )
-        return (
-            manifest.join(from_files, "shard")
-            .select(
-                "shard",
-                "n_seqs",
-                "n_tokens",
-                (F.col("n_seqs") == F.col("n_seqs_files")).alias("seqs_match"),
-                (F.col("n_tokens") == F.col("n_tokens_files")).alias(
-                    "tokens_match"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def cur_shard_manifest_oracle() -> str:
-    """DuckDB twin: the greedy-pack CTE (the registered machinery's
-    generated SQL) -> the same md5 shard fold -> the same accounting.
-    The *_match flags are TRUE by construction in the oracle (they
-    assert the written artifact equals the logical frame — DuckDB
-    grades the logical side; Spark's row proves the disk side)."""
-    from ..operators.curation import greedy_pack_sql
-
-    return f"""
-WITH packed AS ({greedy_pack_sql("documents", seq_len=1024, n_groups=16)})
-SELECT {shard_sql("doc_id", 8)} AS shard,
-       CAST(count(*) AS BIGINT) AS n_seqs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       TRUE AS seqs_match,
-       TRUE AS tokens_match
-FROM packed
-GROUP BY 1
-"""

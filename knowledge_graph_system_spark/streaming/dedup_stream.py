@@ -262,14 +262,10 @@ def stream_dedup_within_watermark(
     older than the watermark is EVICTED (Spark's
     dropDuplicatesWithinWatermark).
 
-    Complements `stateful.stream_first_seen` (dedup-forever,
-    unbounded state): at 100 TB/day a forever-dedup's state grows
-    without bound, while real duplicate arrivals cluster near the
-    original (retries, replays, at-least-once sources). This operator
-    is the bounded-state production default; first_seen remains for
-    genuinely global keys (content hashes already bounded by corpus
-    size). Exact-duplicate semantics only — near-dup needs the LSH
-    index path above."""
+    Bounded state by design: at 100 TB/day a forever-dedup's state
+    grows without bound, while real duplicate arrivals cluster near the
+    original (retries, replays, at-least-once sources). Exact-duplicate
+    semantics only — near-dup needs the LSH index path above."""
     return events_stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
         keys
     )

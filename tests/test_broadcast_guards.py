@@ -176,14 +176,17 @@ def test_subgraph_and_prune_dangling_guards(spark, monkeypatch):
     from knowledge_graph_system_spark.registry import Ctx
 
     ctx = Ctx.get(spark, SF_DIR)
-    nset = traversal.bfs(ctx.edges, ["C1"], 2)
-    hinted = traversal.subgraph(ctx.edges, nset)
+    # checkpointed, as every caller passes it: the plan then shows
+    # subgraph's own hints, not the BFS levels' frontier hints
+    nset = traversal.bfs(ctx.edges, ["C1"], 2).localCheckpoint(eager=False)
+    n_ids = nset.count()
+    hinted = traversal.subgraph(ctx.edges, nset, n_ids)
     assert _analyzed(hinted).count("broadcast") >= 2
     wg_h = WorkingGraph(ctx.nodes, ctx.edges)._prune_dangling()
     n_wg_hints = _analyzed(wg_h.links).count("broadcast")
     assert n_wg_hints >= 2
     monkeypatch.setattr(traversal, "_BROADCAST_FRONTIER_MAX", 0)
-    bare = traversal.subgraph(ctx.edges, nset)
+    bare = traversal.subgraph(ctx.edges, nset, n_ids)
     assert "broadcast" not in _analyzed(bare)
     wg_b = WorkingGraph(ctx.nodes, ctx.edges)._prune_dangling()
     assert _analyzed(wg_b.links).count("broadcast") == n_wg_hints - 2

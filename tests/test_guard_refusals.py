@@ -49,20 +49,6 @@ def test_bloom_budget_names_its_limit(spark, monkeypatch):
         bl.bloom_build(grams, spark)
 
 
-def test_bm25_bucket_mismatch_names_both_values(spark, tmp_path):
-    """bm25 index: a serve-time n_buckets that contradicts the
-    persisted build value refuses naming BOTH numbers (ADVICE r16)."""
-    from knowledge_graph_system_spark.operators.ranking import (
-        bm25_from_index,
-        persist_postings,
-    )
-
-    idx = str(tmp_path / "idx")
-    persist_postings(_docs(spark).limit(50), idx, n_buckets=8)
-    with pytest.raises(ValueError, match="n_buckets=8.*asked for 32"):
-        bm25_from_index(spark, idx, ["spark"], n_buckets=32)
-
-
 def test_epoch_order_refuses_nonpositive_shards(spark):
     from knowledge_graph_system_spark.operators.sampling import epoch_order
 

@@ -150,3 +150,23 @@ def test_r11_candidate_ccnet_buckets(spark):
         assert min(
             r["lm_logp"] for r in rows if r["bucket"] == "head"
         ) > max(r["lm_logp"] for r in rows if r["bucket"] == "tail")
+
+
+def test_lm_score_from_model_matches_self_trained(spark):
+    """Value-parity pin (lm_score_from_model docstring): the
+    scoring-only path under a pre-trained model returns EXACTLY what
+    lm_score's train-then-score path returns when handed the same
+    corpus's model. Since the r17 fold lm_score delegates here, so
+    this now guards the delegation composition (the plan-level
+    byte-stability pin lives in tests/test_lm_fold.py)."""
+    from knowledge_graph_system_spark.operators.lm import (
+        bigram_counts,
+        lm_score_from_model,
+    )
+    from knowledge_graph_system_spark.registry import Ctx
+
+    docs = Ctx.get(spark, SF_DIR).tables["documents"]
+    bigrams, unigrams, v = bigram_counts(docs)
+    got = sorted(map(tuple, lm_score_from_model(docs, bigrams, unigrams, v).collect()))
+    want = sorted(map(tuple, lm_score(docs).collect()))
+    assert len(got) > 0 and got == want

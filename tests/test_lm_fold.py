@@ -1,6 +1,6 @@
 """Render-identity pins for the r17 expression folds (VERDICT r16
-next #2): `lm_score` now delegates to `lm_score_from_model`, and both
-DSIR score paths delegate their Gumbel tail to
+next #2): `lm_score` now delegates to `lm_score_from_model`, and
+`dsir_scores` delegates its Gumbel tail to
 `dsir.gumbel_perturbed_scores`. t_lm_quality / cur_ccnet_budget sit
 OUTSIDE the r17 recording window, so the lm fold is only legal if the
 executed plan is unchanged — these tests prove it by comparing the
@@ -135,10 +135,9 @@ def test_lm_score_from_model_plan_is_prefold_identical(spark):
 
 def test_dsir_gumbel_tail_plan_is_prefold_identical(spark):
     """The shared Gumbel tail builds the exact pre-fold rendering for
-    BOTH consumers' weight shapes (per-gram sum and per-bucket c*lr
-    sum) — dsir_scores and scores_from_state compose it with their
-    unchanged weight frames, so plan identity here extends to both
-    executed paths."""
+    dsir_scores' per-gram-sum weight frame — dsir_scores composes it
+    with that unchanged frame, so plan identity here extends to the
+    executed path."""
     from knowledge_graph_system_spark.operators.dsir import (
         _W_DP,
         doc_gram_buckets,
@@ -146,23 +145,15 @@ def test_dsir_gumbel_tail_plan_is_prefold_identical(spark):
         gumbel_perturbed_scores,
     )
     from knowledge_graph_system_spark.registry import Ctx
-    from knowledge_graph_system_spark.streaming.dsir_stream import extract_batch
 
     docs = Ctx.get(spark, SF).tables["documents"]
     grams = doc_gram_buckets(docs)
     lrs = dsir_logratios(grams)
-    w_batch = (
+    w = (
         grams.join(F.broadcast(lrs), "b")
         .groupBy("doc_id")
         .agg(F.round(F.sum("lr"), _W_DP).alias("w"))
     )
-    features, bucket_counts = extract_batch(docs)
-    w_state = (
-        features.join(F.broadcast(lrs), "b")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("c") * F.col("lr")), _W_DP).alias("w"))
+    assert _norm(gumbel_perturbed_scores(docs, w)) == _norm(
+        _prefold_gumbel_tail(docs, w)
     )
-    for w in (w_batch, w_state):
-        assert _norm(gumbel_perturbed_scores(docs, w)) == _norm(
-            _prefold_gumbel_tail(docs, w)
-        )

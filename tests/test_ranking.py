@@ -6,8 +6,6 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from pyspark.sql import functions as F
-
 from knowledge_graph_system_spark.operators.ranking import bm25_search, bm25_sql
 from tests.conftest import SF_DIR
 
@@ -115,122 +113,3 @@ def test_prebuilt_postings_equal_fused(docs, spark, tmp_path):
 def test_bm25_no_hit_query_returns_empty(docs):
     """Query terms absent from the corpus: empty result, no error."""
     assert bm25_search(docs, ["zzzznotaword", "qqqqmissing"]).count() == 0
-
-
-def test_persisted_index_serves_identically(docs, spark, tmp_path):
-    """The term-bucketed persisted index (VERDICT r15 next #6: full
-    postings + dl denormalized + precomputed df dictionary + corpus
-    stats) serves the registered r_bm25_topk query byte-identically to
-    the fused one-pass operator — same rows, same order, same 6-dp
-    scores — for the registered query AND a disjoint second query the
-    index was never specialized for (the point of persisting FULL
-    postings)."""
-    from knowledge_graph_system_spark.operators.ranking import (
-        bm25_from_index,
-        bm25_search,
-        persist_postings,
-    )
-
-    idx = str(tmp_path / "bm25_index")
-    persist_postings(docs, idx, n_buckets=16)
-    for q in (QUERY, ["scan", "merge"]):
-        got = [
-            tuple(r)
-            for r in bm25_from_index(
-                spark, idx, q, top_k=20, n_buckets=16
-            ).collect()
-        ]
-        want = [tuple(r) for r in bm25_search(docs, q, top_k=20).collect()]
-        assert got == want and len(got) > 0
-
-
-def test_persisted_index_prunes_buckets(docs, spark, tmp_path):
-    """Serving reads ONLY the query terms' bucket directories: the
-    postings scan carries bucket IN (...) as a partition filter (the
-    100 TB contract — per-query cost is hit postings in probed buckets,
-    never an index-wide scan)."""
-    from knowledge_graph_system_spark.operators.ranking import (
-        bm25_from_index,
-        persist_postings,
-    )
-
-    idx = str(tmp_path / "bm25_index")
-    persist_postings(docs, idx, n_buckets=16)
-    plan = bm25_from_index(
-        spark, idx, QUERY, top_k=10, n_buckets=16
-    )._jdf.queryExecution().executedPlan().toString()
-    # partition pruning on the postings read: a PartitionFilters entry
-    # binding bucket, and strictly fewer input files than the index has
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:200]
-    n_query_buckets = (
-        spark.createDataFrame([(t,) for t in QUERY], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(16)).alias("b"))
-        .distinct()
-        .count()
-    )
-    assert n_query_buckets < 16
-    # and the on-disk layout backs it: the query's buckets map to a
-    # strict subset of the index's bucket=N partition directories
-    import os
-
-    all_buckets = {
-        d for d in os.listdir(f"{idx}/postings") if d.startswith("bucket=")
-    }
-    query_buckets = {
-        f"bucket={r[0]}"
-        for r in spark.createDataFrame([(t,) for t in QUERY], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(16)))
-        .collect()
-    }
-    assert query_buckets <= all_buckets
-    assert len(query_buckets) < len(all_buckets)
-
-
-def test_persisted_index_rejects_empty_query(docs, spark, tmp_path):
-    from knowledge_graph_system_spark.operators.ranking import bm25_from_index
-
-    with pytest.raises(ValueError):
-        bm25_from_index(spark, str(tmp_path / "nonexistent"), [])
-
-
-def test_persisted_index_self_describes_n_buckets(docs, spark, tmp_path):
-    """ADVICE r16: the index persists its own n_buckets, so serving
-    without the parameter reads the built value, and serving with a
-    MISMATCHED value refuses loudly (naming both numbers) instead of
-    pruning the wrong bucket directories and returning incomplete
-    results."""
-    from knowledge_graph_system_spark.operators.ranking import (
-        bm25_from_index,
-        bm25_search,
-        persist_postings,
-    )
-
-    idx = str(tmp_path / "bm25_index")
-    persist_postings(docs, idx, n_buckets=16)
-    got = [
-        tuple(r) for r in bm25_from_index(spark, idx, QUERY, top_k=20).collect()
-    ]
-    want = [tuple(r) for r in bm25_search(docs, QUERY, top_k=20).collect()]
-    assert got == want and len(got) > 0
-    with pytest.raises(ValueError, match="n_buckets=16.*asked for 64"):
-        bm25_from_index(spark, idx, QUERY, top_k=20, n_buckets=64)
-
-
-def test_r19_candidate_bm25_index_topk(docs, spark, duck):
-    """Driver-style compare for the prepared r19 candidate: the
-    persisted-index serving path graded against the SAME bm25_sql
-    oracle as the fused registered row — one oracle pins both
-    execution paths."""
-    from knowledge_graph_system_spark.operators.ranking import (
-        r_bm25_index_topk,
-        r_bm25_index_topk_oracle,
-    )
-    from tests.conftest import SF_DIR
-
-    got = [tuple(r) for r in r_bm25_index_topk(spark, SF_DIR).collect()]
-    want = [tuple(r) for r in duck.sql(r_bm25_index_topk_oracle()).fetchall()]
-    assert len(got) == 20
-    assert [(a, c) for a, _, c in got] == [(a, c) for a, _, c in want]
-    for (_, s1, _), (_, s2, _) in zip(got, want):
-        assert s1 == pytest.approx(s2, abs=2e-6)

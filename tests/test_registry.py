@@ -3,6 +3,9 @@ oracle, and a name can be registered once only."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -62,3 +65,62 @@ def test_duplicate_registration_raises():
     with pytest.raises(ValueError, match="already registered"):
         query("q1_pricing_summary")(lambda spark, sf_dir: None)
     assert load_all()["q1_pricing_summary"] is first
+
+
+def _module_imports(path: Path, module: str):
+    """Dotted names that `path` (module `module`) imports anywhere in its
+    body, function-local and relative imports included. A `from X import
+    y` yields both `X` and `X.y`, since `y` may be a submodule."""
+    parts = module.split(".")
+    package = parts if path.name == "__init__.py" else parts[:-1]
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            yield from (alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = package[: len(package) - node.level + 1] if node.level else []
+            base = ".".join(base + ([node.module] if node.module else []))
+            yield base
+            yield from (f"{base}.{alias.name}" for alias in node.names)
+
+
+def _repo_file(root: Path, dotted: str) -> Path | None:
+    target = root.joinpath(*dotted.split("."))
+    for cand in (target.with_suffix(".py"), target / "__init__.py"):
+        if cand.is_file():
+            return cand
+    return None
+
+
+def test_every_module_is_reached_outside_tests():
+    """Every package module is imported, directly or transitively, by the
+    registry, the driver entry, the bench, the benchmark or a tool — a
+    module that only tests reach is dead weight."""
+    root = Path(__file__).resolve().parent.parent
+    roots = [
+        root / "knowledge_graph_system_spark" / "registry.py",
+        root / "__spark_entry__.py",
+        root / "bench.py",
+        *sorted((root / "perfbench").glob("*.py")),
+        *sorted((root / "tools").glob("*.py")),
+    ]
+    seen: set[Path] = set()
+    todo = list(roots)
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
+        module = module.removesuffix(".__init__")
+        for dotted in _module_imports(path, module):
+            names = dotted.split(".")
+            # importing a.b.c also runs a/__init__ and a/b/__init__
+            for i in range(1, len(names) + 1):
+                found = _repo_file(root, ".".join(names[:i]))
+                if found is not None and found not in seen:
+                    todo.append(found)
+    package = root / "knowledge_graph_system_spark"
+    orphans = sorted(
+        str(p.relative_to(package)) for p in package.rglob("*.py") if p not in seen
+    )
+    assert not orphans, f"reached only by tests: {orphans}"

@@ -5,6 +5,7 @@ factors plus the paper's exemplar-election semantics."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -242,3 +243,19 @@ def test_kmeans_semdedup_property_random_corpora(spark):
         assert got == want
 
     check()
+
+
+def test_kmeans_codebook_refuses_short_seed(spark):
+    """ADVICE r13 (low): fewer than k vectors cannot Forgy-init a
+    k-codebook — refuse loudly instead of silently shrinking the
+    codebook (which would degrade the k ∝ N contract without signal)."""
+    from knowledge_graph_system_spark.operators.semdedup import (
+        kmeans_codebook,
+    )
+
+    vecs = spark.createDataFrame(
+        [("a", [0.1, 0.2]), ("b", [0.3, 0.4])],
+        "vec_id string, v array<double>",
+    )
+    with pytest.raises(ValueError, match="Forgy"):
+        kmeans_codebook(vecs, k=5)

@@ -1,13 +1,11 @@
 """Training-shard writer (sources/shards.py) — the pipeline's final
 sink: deterministic shard membership, exact manifest accounting
-against the written files, file-count contract, balance, and the
-gradeable candidate row vs its DuckDB oracle."""
+against the written files, file-count contract and balance."""
 
 from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from pyspark.sql import functions as F
@@ -103,30 +101,6 @@ def test_shards_are_balanced(spark, packed, tmp_path):
     toks = [r["n_tokens"] for r in m]
     assert len(m) == 8 and min(toks) > 0
     assert max(toks) / min(toks) < 2
-
-
-def test_candidate_cur_shard_manifest(spark):
-    """Driver-style compare at BOTH gate scale factors for the
-    prepared candidate row: the written artifact's manifest (with its
-    disk-vs-logical match flags) equals the DuckDB restatement of
-    pack -> shard fold -> accounting."""
-    from knowledge_graph_system_spark.sources.shards import (
-        cur_shard_manifest,
-        cur_shard_manifest_oracle,
-    )
-
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        got = sorted(map(tuple, cur_shard_manifest(spark, sf).collect()))
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf}/documents.parquet')"
-        )
-        want = sorted(
-            map(tuple, con.execute(cur_shard_manifest_oracle()).fetchall())
-        )
-        con.close()
-        assert len(got) == 8 and got == want
 
 
 def test_shard_assign_rejects_bad_n(spark, packed):

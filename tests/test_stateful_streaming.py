@@ -1,17 +1,10 @@
-"""Custom stateful operators via applyInPandasWithState: state must
-persist ACROSS micro-batches (running totals accumulate; first-seen
-dedup suppresses keys seen in earlier batches)."""
+"""Streaming joins (streaming/joins.py): the stateful stream-stream
+interval join and the stateless stream-static enrichment."""
 
 from __future__ import annotations
 
 import os
-import time
 import uuid
-
-from knowledge_graph_system_spark.streaming.stateful import (
-    stream_first_seen,
-    stream_running_totals,
-)
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -24,63 +17,6 @@ def _stream(spark, src):
     return (
         spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src + "/b=*")
     )
-
-
-def test_running_totals_accumulate_across_batches(spark, tmp_path):
-    import datetime as dt
-
-    t = dt.datetime(2024, 6, 1)
-    src = str(tmp_path / "s1")
-    os.makedirs(src)
-    _write_batch(spark, src + "/b=0", [(1, t, 7, "click", 10.0, "{}"), (2, t, 7, "click", 5.0, "{}")])
-    time.sleep(1.1)
-    _write_batch(spark, src + "/b=1", [(3, t, 7, "click", 2.5, "{}"), (4, t, 9, "view", 1.0, "{}")])
-
-    sink = f"rt_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_running_totals(_stream(spark, src))
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(f"SELECT * FROM {sink}").collect()
-    latest = {}
-    for r in rows:  # update mode appends per-batch snapshots; last wins
-        latest[r["user_id"]] = max(
-            (r["n_events"], r["total_value"]), latest.get(r["user_id"], (0, 0.0))
-        )
-    assert latest[7] == (3, 17.5)  # state carried 2 events + 15.0 into batch 1
-    assert latest[9] == (1, 1.0)
-
-
-def test_first_seen_dedup_across_batches(spark, tmp_path):
-    import datetime as dt
-    from pyspark.sql import functions as F
-
-    t = dt.datetime(2024, 6, 1)
-    src = str(tmp_path / "s2")
-    os.makedirs(src)
-    _write_batch(spark, src + "/b=0", [(1, t, 1, "alpha", 10.0, "{}"), (2, t, 1, "beta", 20.0, "{}")])
-    time.sleep(1.1)
-    # alpha re-appears in batch 1 → must be suppressed by state
-    _write_batch(spark, src + "/b=1", [(3, t, 1, "alpha", 99.0, "{}"), (4, t, 1, "gamma", 30.0, "{}")])
-
-    keyed = _stream(spark, src).select(F.col("event_type").alias("key"), "event_id", "value")
-    sink = f"fs_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_first_seen(keyed)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = {r["key"]: r["event_id"] for r in spark.sql(f"SELECT * FROM {sink}").collect()}
-    assert out == {"alpha": 1, "beta": 2, "gamma": 4}
 
 
 def test_stream_stream_interval_join(spark, tmp_path):

@@ -11,6 +11,9 @@ python -m pytest tests/test_textstats.py::test_teacher_module_renders_historic_l
 # Then the cross-module drift trip-wire (one small Spark job): DSIR's
 # resampling target must equal the classifier's teacher labels doc-by-doc.
 python -m pytest tests/test_dsir.py::test_dsir_target_matches_graded_teacher -q
+# No package module may be reachable only from tests (import graph via
+# ast, no Spark): an orphaned module fails here, not after the sweeps.
+python -m pytest tests/test_registry.py::test_every_module_is_reached_outside_tests -q
 echo "=== 1/5 graded gate (sf0.01, full registry) ==="
 python tools/check_correctness.py /root/testdata/sf0.01
 echo "=== 2/5 entry smoke ==="
