@@ -736,14 +736,14 @@ def _shortest_pairs_bidir(
             "edges": edf,
             "seen": a_ids.select(
                 F.col("__src").alias("__key"), F.col("__src").alias("__node")
-            ).localCheckpoint(eager=True),
+            ).localCheckpoint(eager=False),
             "depth": 0,
         },
         "b": {
             "edges": redf,
             "seen": b_ids.select(
                 F.col("__tgt").alias("__key"), F.col("__tgt").alias("__node")
-            ).localCheckpoint(eager=True),
+            ).localCheckpoint(eager=False),
             "depth": 0,
         },
     }
@@ -786,6 +786,7 @@ def _shortest_pairs_bidir(
         s["frontier"] = s["seen"]
         _probe(s, s["seen"])
         s["levels"] = [s["seen"].withColumn("__d", F.lit(0))]
+        s["n_seen"] = s["n_frontier"]
         n_state += s["n_frontier"]
     while sides["f"]["depth"] + sides["b"]["depth"] < hi:
         live = [s for s in sides.values() if s["n_frontier"] > 0]
@@ -794,6 +795,9 @@ def _shortest_pairs_bidir(
         # cheaper expected expansion first; deterministic tie-break on
         # the side name keeps runs reproducible
         s = min(live, key=lambda x: (x["exp_cost"], x["name"]))
+        # lazy checkpoint: the probe's aggregate materializes the level
+        # (the `_expand` shape); seen stays a union of checkpointed
+        # levels, broadcast while its count fits
         nxt = (
             s["edges"]
             .join(
@@ -802,8 +806,10 @@ def _shortest_pairs_bidir(
             )
             .select("__key", F.col("__to").alias("__node"))
             .distinct()
-            .join(s["seen"], ["__key", "__node"], "left_anti")
-            .localCheckpoint(eager=True)
+            .join(
+                _frontier_side(s["seen"], s["n_seen"]), ["__key", "__node"], "left_anti"
+            )
+            .localCheckpoint(eager=False)
         )
         s["depth"] += 1
         _probe(s, nxt, need_cost=len(live) > 1)
@@ -819,7 +825,8 @@ def _shortest_pairs_bidir(
                 " the hop bound"
             )
         s["levels"].append(nxt.withColumn("__d", F.lit(s["depth"])))
-        s["seen"] = s["seen"].unionByName(nxt).localCheckpoint(eager=True)
+        s["seen"] = s["seen"].unionByName(nxt)
+        s["n_seen"] += s["n_frontier"]
         s["frontier"] = nxt
     fwd = reduce(DataFrame.unionByName, sides["f"]["levels"]).select(
         F.col("__key").alias("__src"), "__node", F.col("__d").alias("__fd")

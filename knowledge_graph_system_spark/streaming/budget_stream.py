@@ -50,8 +50,6 @@ ingestion.py` epoch loop) the way the other st_* legs do.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,9 +64,7 @@ from ..operators.classifier import (
     token_budget_filter,
 )
 from ..registry import Ctx
-from .landing import dedup_cuts, stamp_landing_mtimes
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+from .landing import range_parts, replay
 
 
 def score_batch(batch_docs: DataFrame, w_frame: DataFrame) -> DataFrame:
@@ -135,16 +131,9 @@ def streaming_budget_select(
     mass log and (when `stats` is given) recorded per epoch. After the
     replay drains, the doc-level cut runs over the narrow log through
     the graded `token_budget_filter` and rolls up per source — the
-    exact `cur_budget_filter` output.
-
-    The tempfile.mkdtemp landing/log dirs are DRIVER-LOCAL by design
-    (replay harness; a deployment points at an object store)."""
-    tmp = tempfile.mkdtemp(prefix="kg_budget_stream_")
-    landing = os.path.join(tmp, "landing")
-    scored_dir = os.path.join(tmp, "scored")
-    mass_dir = os.path.join(tmp, "mass")
-    os.makedirs(landing)
-
+    exact `cur_budget_filter` output. The logs live in `replay`'s
+    driver-local working dir (a deployment points at an object
+    store)."""
     docs = Ctx.get(spark, sf_dir).tables["documents"]
     data = (
         docs.select("doc_id", "source", F.expr(_X_EXPR).alias("x"))
@@ -153,30 +142,10 @@ def streaming_budget_select(
     )
     wf = _w_frame(spark, logreg_train(data)).localCheckpoint(eager=True)
 
-    probs = [i / n_batches for i in range(1, n_batches)]
-    cuts = dedup_cuts(docs.stat.approxQuantile("doc_id", probs, 0.0)) if probs else []
-    n_eff = len(cuts) + 1
-    lo = None
-    for i in range(n_eff):
-        part = docs
-        if lo is not None:
-            part = part.filter(F.col("doc_id") > lo)
-        if i < n_eff - 1:
-            part = part.filter(F.col("doc_id") <= cuts[i])
-            lo = cuts[i]
-        bdir = os.path.join(landing, f"batch{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(bdir)
-        stamp_landing_mtimes(bdir, i)
-
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        mass_dir = os.path.join(tmp, "mass")
         scored = score_batch(batch_df, wf)
-        scored.write.mode("append").parquet(scored_dir)
+        scored.write.mode("append").parquet(os.path.join(tmp, "scored"))
         scored.groupBy("p").agg(
             F.sum("n_tokens").cast("bigint").alias("m")
         ).write.mode("append").parquet(mass_dir)
@@ -185,34 +154,23 @@ def streaming_budget_select(
             ep["epoch"] = int(batch_id)
             stats.append(ep)
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        scored_log = spark.read.parquet(scored_dir)
+    def result(tmp: str) -> DataFrame:
+        scored_log = spark.read.parquet(os.path.join(tmp, "scored"))
         bframe = (
-            spark.read.parquet(mass_dir)
+            spark.read.parquet(os.path.join(tmp, "mass"))
             .agg(F.floor(F.lit(frac) * F.sum("m")).cast("bigint").alias("b"))
         )
         kept = token_budget_filter(scored_log, bframe)
-        return (
-            kept.groupBy("source")
-            .agg(
-                F.count("*").alias("n_kept"),
-                F.sum("n_tokens").cast("bigint").alias("kept_tokens"),
-                F.sum(F.round(F.col("p") * 1000000).cast("bigint"))
-                .cast("bigint")
-                .alias("sum_p6"),
-                F.min("p").alias("min_p"),
-            )
-            .localCheckpoint(eager=True)
+        return kept.groupBy("source").agg(
+            F.count("*").alias("n_kept"),
+            F.sum("n_tokens").cast("bigint").alias("kept_tokens"),
+            F.sum(F.round(F.col("p") * 1000000).cast("bigint"))
+            .cast("bigint")
+            .alias("sum_p6"),
+            F.min("p").alias("min_p"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return replay(range_parts(docs, "doc_id", n_batches), handle, result)
 
 
 def st_budget_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,17 +24,13 @@ unchanged; only executor count scales.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.curation import word_ngrams
 from ..registry import query
-from .landing import dedup_cuts, stamp_landing_mtimes
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+from .landing import range_parts, replay
 
 
 def process_contamination_batch(
@@ -82,17 +78,12 @@ def streaming_contamination(
     static side. Returns the accumulated per-contaminated-doc counts —
     equal to the batch operator over the full corpus exactly.
 
-    The tempfile.mkdtemp landing/checkpoint/out dirs are DRIVER-LOCAL
-    by design — this function is the replay harness; a real deployment
-    points the stream at an object-store landing zone and checkpoint
-    (the ann_ivf_lifecycle note). The state probe side is stateless
+    The landing, checkpoint and output dirs live in `replay`'s
+    driver-local working dir; a real deployment points the stream at
+    an object-store landing zone and checkpoint (the ann_ivf_lifecycle
+    note). The state probe side is stateless
     here (eval grams are a static broadcast-side frame), so no
     Hadoop-FS probe is needed."""
-    tmp = tempfile.mkdtemp(prefix="kg_contam_stream_")
-    landing = os.path.join(tmp, "landing")
-    out_dir = os.path.join(tmp, "out")
-    os.makedirs(landing)
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     ev = docs.filter(F.col("doc_id") % 25 == 0)
     tr = docs.filter(F.col("doc_id") % 25 != 0)
@@ -109,53 +100,18 @@ def streaming_contamination(
         .localCheckpoint(eager=True)
     )
 
-    # dedup_cuts: duplicate quantile values would yield empty batch
-    # ranges — a silent degenerate replay (ADVICE r10); the effective
-    # batch count honors the data, len(cuts) + 1
-    cuts = dedup_cuts(
-        tr.stat.approxQuantile(
-            "doc_id", [i / n_batches for i in range(1, n_batches)], 0.0
-        )
-    )
-    n_eff = len(cuts) + 1
-    lo = None
-    for i in range(n_eff):
-        part = tr
-        if lo is not None:
-            part = part.filter(F.col("doc_id") > lo)
-        if i < n_eff - 1:
-            part = part.filter(F.col("doc_id") <= cuts[i])
-            lo = cuts[i]
-        bdir = os.path.join(landing, f"batch{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(bdir)
-        # explicit, strictly increasing mtimes: batch order must not
-        # depend on filesystem timestamp granularity (ADVICE r9 —
-        # harmless here since parity is order-free, but the harness
-        # discipline is uniform across the streaming family)
-        stamp_landing_mtimes(bdir, i)
-
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-    )
-
     n_ev = ev_grams.count()  # guard count paid once per run
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        process_contamination_batch(batch_df, ev_grams, out_dir, n, n_ev=n_ev)
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        process_contamination_batch(
+            batch_df, ev_grams, os.path.join(tmp, "out"), n, n_ev=n_ev
         )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return replay(
+        range_parts(tr, "doc_id", n_batches),
+        handle,
+        lambda tmp: spark.read.parquet(os.path.join(tmp, "out")),
+    )
 
 
 def st_contamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

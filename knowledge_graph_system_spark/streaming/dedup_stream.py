@@ -39,15 +39,13 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.fs import parquet_state_exists
 from ..functions.scale import fan_out
-from .landing import stamp_landing_mtimes
+from .landing import replay
 from ..operators.dedup import (
     JACCARD_THRESHOLD,
     MAX_BUCKET,
@@ -57,8 +55,6 @@ from ..operators.dedup import (
     minhash_signatures_from_arrays,
     verify_jaccard_arrays,
 )
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def _bands_of(sigs: DataFrame) -> DataFrame:
@@ -207,48 +203,24 @@ def streaming_near_dup(
     driver scale factor, largest bucket 28 < 64); a band that
     degenerates later yields a SUPERSET (the early, still-small-bucket
     pairs stand — the honest semantics for an online detector)."""
-    tmp = tempfile.mkdtemp(prefix="kg_dedup_stream_")
-    landing = os.path.join(tmp, "landing")
-    band_dir = os.path.join(tmp, "bands")
-    shingle_dir = os.path.join(tmp, "shingles")
-    pairs_dir = os.path.join(tmp, "pairs")
-    os.makedirs(landing)
-    os.makedirs(band_dir)
-    os.makedirs(shingle_dir)
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    for i in range(n_batches):
-        bdir = os.path.join(landing, f"batch{i}")
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(bdir)
-        # explicit per-batch mtime order (streaming/landing.py) — the
-        # pair set is order-insensitive, but batch_id labels aren't
-        stamp_landing_mtimes(bdir, i)
 
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-        .select("doc_id", "text")
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
         process_batch(
-            batch_df, band_dir, shingle_dir, pairs_dir, batch_id, max_bucket
+            batch_df.select("doc_id", "text"),
+            os.path.join(tmp, "bands"),
+            os.path.join(tmp, "shingles"),
+            os.path.join(tmp, "pairs"),
+            batch_id,
+            max_bucket,
         )
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(pairs_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # modulo split: the pair set is order-insensitive, but batch_id
+    # labels follow the part order
+    parts = [docs.filter(F.col("doc_id") % n_batches == i) for i in range(n_batches)]
+    return replay(
+        parts, handle, lambda tmp: spark.read.parquet(os.path.join(tmp, "pairs"))
+    )
 
 
 def stream_dedup_within_watermark(

@@ -20,8 +20,9 @@ Epoch 2 simulates an in-flight (crashed) ingestion: its rows are in
 the sink but the committed watermark (max completed epoch = 1) excludes
 them from every snapshot read — the whole point of the ST1 contract.
 
-Scale shape: the stream source is a partitioned parquet listing (at
-100 TB: a real landing zone with maxFilesPerTrigger); the upsert's
+Scale shape: the demo lands its first `doc_limit` documents as one
+file through `landing.replay`, so all epochs run in one micro-batch
+(at 100 TB: a real landing zone with maxFilesPerTrigger); the upsert's
 similarity join is the same bounded two-tier matcher the batch path
 uses; the sink append is partitioned by epoch so snapshot reads prune.
 """
@@ -29,58 +30,35 @@ uses; the sink append is partitioned by epoch so snapshot reads prune.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import Ctx, query
 from ..sources.ingest import ingest_documents, two_tier_upsert
+from .landing import replay
 
 _DOC_LIMIT = 40  # bounded demo corpus: constant across scale factors
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
 def streaming_ingest(spark: SparkSession, sf_dir: str, doc_limit: int = _DOC_LIMIT) -> DataFrame:
     """Run the availableNow ingest stream; return the committed-snapshot
     concept frame (doc_id, chunk_index, concept_id, term, resolved_id,
     action, epoch)."""
-    tmp = tempfile.mkdtemp(prefix="kg_ingest_stream_")
-    concept_dir = os.path.join(tmp, "concepts")
-    epoch_dir = os.path.join(tmp, "epochs")
-
-    # the file stream source wants a LANDING DIRECTORY (at 100 TB: the
-    # ingest drop zone new files arrive into); stage the fixture there.
-    # Single landing file -> no mtime stamping needed (the multi-batch
-    # harnesses use streaming/landing.py:stamp_landing_mtimes)
-    landing = os.path.join(tmp, "landing")
-    os.makedirs(landing)
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        os.symlink(src, os.path.join(landing, "documents.parquet"))
-    except OSError:
-        import shutil
-
-        shutil.copy(src, os.path.join(landing, "documents.parquet"))
-
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .parquet(landing)
-        .filter(F.col("doc_id") < doc_limit)
-        .select("doc_id", "text")
-    )
-
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out_cols = ["doc_id", "chunk_index", "concept_id", "term",
                 "embedding", "resolved_id", "action", "epoch"]
 
-    def log_epoch(epoch: int, status: str) -> None:
-        from ..functions.scale import local_df
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        concept_dir = os.path.join(tmp, "concepts")
+        batch = batch_df.select("doc_id", "text")
 
-        local_df(spark, [(epoch, status)], "epoch int, status string") \
-            .write.mode("append").parquet(epoch_dir)
+        def log_epoch(epoch: int, status: str) -> None:
+            from ..functions.scale import local_df
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+            local_df(spark, [(epoch, status)], "epoch int, status string") \
+                .write.mode("append").parquet(os.path.join(tmp, "epochs"))
+
         # -- epoch 0: even docs against the empty graph
         # eager checkpoint: epoch 2's retry below re-emits these SAME
         # deterministic rows — one Python-boundary ingest pass instead
@@ -88,7 +66,7 @@ def streaming_ingest(spark: SparkSession, sf_dir: str, doc_limit: int = _DOC_LIM
         # epoch log, not in recomputation)
         log_epoch(0, "record")
         w0 = ingest_documents(
-            batch_df.filter(F.col("doc_id") % 2 == 0)
+            batch.filter(F.col("doc_id") % 2 == 0)
         ).localCheckpoint(eager=True)
         w0.withColumn("epoch", F.lit(0)).select(out_cols) \
             .write.mode("append").parquet(concept_dir)
@@ -105,7 +83,7 @@ def streaming_ingest(spark: SparkSession, sf_dir: str, doc_limit: int = _DOC_LIM
         from ..functions.text import chunk_by_count
         from ..sources.ingest import embed_concepts, mock_extract_concepts
 
-        odd = batch_df.filter(F.col("doc_id") % 2 == 1)
+        odd = batch.filter(F.col("doc_id") % 2 == 1)
         incoming = embed_concepts(mock_extract_concepts(chunk_by_count(odd)))
         w1 = two_tier_upsert(incoming, existing)
         w1.withColumn("epoch", F.lit(1)).select(out_cols) \
@@ -121,34 +99,21 @@ def streaming_ingest(spark: SparkSession, sf_dir: str, doc_limit: int = _DOC_LIM
         w0.withColumn("epoch", F.lit(2)).select(out_cols) \
             .write.mode("append").parquet(concept_dir)
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-
-        epochs = spark.read.parquet(epoch_dir)
+    def result(tmp: str) -> DataFrame:
+        epochs = spark.read.parquet(os.path.join(tmp, "epochs"))
         committed = (
             epochs.filter(F.col("status") == "complete")
             .agg(F.max("epoch").alias("c"))
             .collect()[0]["c"]
         )
         committed = -1 if committed is None else committed
-        # eager checkpoint: the snapshot must not depend on the working
-        # dir once it is removed below (ADVICE r5: mkdtemp leak)
         return (
-            spark.read.parquet(concept_dir)
+            spark.read.parquet(os.path.join(tmp, "concepts"))
             .filter(F.col("epoch") <= committed)
             .drop("embedding")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
+    return replay([docs.filter(F.col("doc_id") < doc_limit)], handle, result)
 
 
 def _oracle() -> str:

@@ -9,10 +9,12 @@ condition lets the engine evict rows once the watermark passes
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .landing import stamp_landing_mtimes
+from .landing import replay
 
 
 def stream_interval_join(
@@ -88,66 +90,30 @@ def st_enrich_stream(spark, sf_dir: str) -> DataFrame:
     join+aggregate — per-batch enrichment of a partitioned replay is
     row-identical to enriching the whole table at once, which is the
     statelessness contract this row grades."""
-    import os
-    import shutil
-    import tempfile
-
     from ..registry import Ctx
 
     ctx = Ctx.get(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="kg_enrich_stream_")
-    landing = os.path.join(tmp, "landing")
-    out_dir = os.path.join(tmp, "enriched")
-    os.makedirs(landing)
-
     events = ctx.tables["events"]
-    for i in range(3):
-        bdir = os.path.join(landing, f"batch{i}")
-        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(bdir)
-        # explicit per-batch mtime order (streaming/landing.py) — the
-        # aggregate is order-insensitive; determinism discipline only
-        stamp_landing_mtimes(bdir, i)
-
     dim = ctx.tables["customer"].select(
         F.col("c_custkey").alias("user_id"),
         "c_mktsegment",
     )
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-        "value double, props string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-        .select("event_id", "user_id", "event_type", "value")
-    )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = stream_enrich_static(batch_df, dim, key="user_id", how="left")
-        enriched.write.mode("append").parquet(out_dir)
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        batch = batch_df.select("event_id", "user_id", "event_type", "value")
+        enriched = stream_enrich_static(batch, dim, key="user_id", how="left")
+        enriched.write.mode("append").parquet(os.path.join(tmp, "enriched"))
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        return (
-            spark.read.parquet(out_dir)
-            .groupBy(F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment"))
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return replay(
+        [events.filter(F.col("event_id") % 3 == i) for i in range(3)],
+        handle,
+        lambda tmp: spark.read.parquet(os.path.join(tmp, "enriched"))
+        .groupBy(F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        ),
+    )
 
 
 def st_enrich_stream_oracle() -> str:

@@ -28,16 +28,12 @@ extends the ingestion dataflow like the other st_* legs.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import Ctx
-from .landing import dedup_cuts, stamp_landing_mtimes
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+from .landing import range_parts, replay
 
 # the smp_grid_quantiles grid (shared so stream==batch parity is
 # against the registered row's exact contract)
@@ -105,34 +101,10 @@ def streaming_grid_quantiles(
     exact quantile snapshot of everything arrived so far is recorded.
     The final answer re-aggregates the hist log — equal to
     `smp_grid_quantiles` on the full corpus exactly."""
-    tmp = tempfile.mkdtemp(prefix="kg_gq_stream_")
-    landing = os.path.join(tmp, "landing")
-    hist_dir = os.path.join(tmp, "hist")
-    os.makedirs(landing)
-
     docs = Ctx.get(spark, sf_dir).tables["documents"]
-    probs = [i / n_batches for i in range(1, n_batches)]
-    cuts = dedup_cuts(docs.stat.approxQuantile("doc_id", probs, 0.0)) if probs else []
-    n_eff = len(cuts) + 1
-    lo = None
-    for i in range(n_eff):
-        part = docs
-        if lo is not None:
-            part = part.filter(F.col("doc_id") > lo)
-        if i < n_eff - 1:
-            part = part.filter(F.col("doc_id") <= cuts[i])
-            lo = cuts[i]
-        bdir = os.path.join(landing, f"batch{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(bdir)
-        stamp_landing_mtimes(bdir, i)
 
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        hist_dir = os.path.join(tmp, "hist")
         batch_hist(batch_df).write.mode("append").parquet(hist_dir)
         if stats is not None:
             snap = quantiles_from_hist(spark.read.parquet(hist_dir)).collect()
@@ -143,19 +115,11 @@ def streaming_grid_quantiles(
                 }
             )
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        return quantiles_from_hist(
-            spark.read.parquet(hist_dir)
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return replay(
+        range_parts(docs, "doc_id", n_batches),
+        handle,
+        lambda tmp: quantiles_from_hist(spark.read.parquet(os.path.join(tmp, "hist"))),
+    )
 
 
 def st_grid_quantiles_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,15 +19,13 @@ stream checkpoint and readable by the batch estimator at any time.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.fs import parquet_state_exists
 from ..operators.sketches import hll_estimate, hll_merge, hll_registers
-from .landing import stamp_landing_mtimes
+from .landing import replay
 
 
 def merge_batch_registers(
@@ -62,48 +60,20 @@ def streaming_distinct_estimate(
     HLL registers incrementally; return the final per-source
     estimates. Register state (and therefore the estimate) is
     bit-identical to the batch operator run on the whole corpus."""
-    tmp = tempfile.mkdtemp(prefix="kg_sketch_stream_")
-    landing = os.path.join(tmp, "landing")
-    state_dir = os.path.join(tmp, "registers")
-    os.makedirs(landing)
-    os.makedirs(state_dir)
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    for i in range(n_batches):
-        bdir = os.path.join(landing, f"batch{i}")
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(bdir)
-        # explicit per-batch mtime order (streaming/landing.py) — the
-        # merged sketch is order-insensitive by algebra; the stamp makes
-        # the replay's micro-batch sequence deterministic anyway
-        stamp_landing_mtimes(bdir, i)
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-        .select("source", F.explode(F.split("text", " ")).alias("w"))
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        words = batch_df.select("source", F.explode(F.split("text", " ")).alias("w"))
+        merge_batch_registers(words, "w", ["source"], os.path.join(tmp, "registers"))
+
+    parts = [docs.filter(F.col("doc_id") % n_batches == i) for i in range(n_batches)]
+    return replay(
+        parts,
+        handle,
+        lambda tmp: hll_estimate(
+            spark.read.parquet(os.path.join(tmp, "registers")), ["source"]
+        ),
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_registers(batch_df, "w", ["source"], state_dir)
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        final = hll_estimate(
-            spark.read.parquet(state_dir), ["source"]
-        ).localCheckpoint(eager=True)
-        return final
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def merge_batch_cms(
@@ -169,42 +139,13 @@ def streaming_cms_estimate(
     to one whole-corpus build."""
     from ..operators.cms import cms_estimate
 
-    tmp = tempfile.mkdtemp(prefix="kg_cms_stream_")
-    landing = os.path.join(tmp, "landing")
-    state_dir = os.path.join(tmp, "counters")
-    os.makedirs(landing)
-    os.makedirs(state_dir)
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    for i in range(n_batches):
-        bdir = os.path.join(landing, f"batch{i}")
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(bdir)
-        # explicit per-batch mtime order (streaming/landing.py) — the
-        # merged sketch is order-insensitive by algebra; the stamp makes
-        # the replay's micro-batch sequence deterministic anyway
-        stamp_landing_mtimes(bdir, i)
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-        .select(F.explode(F.split("text", " ")).alias("w"))
-    )
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        words = batch_df.select(F.explode(F.split("text", " ")).alias("w"))
+        merge_batch_cms(words, "w", None, os.path.join(tmp, "counters"))
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_cms(batch_df, "w", None, state_dir)
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    def result(tmp: str) -> DataFrame:
         words = docs.select(F.explode(F.split("text", " ")).alias("w"))
         top = (
             words.groupBy("w")
@@ -212,15 +153,14 @@ def streaming_cms_estimate(
             .orderBy(F.col("exact_count").desc(), F.col("w"))
             .limit(20)
         )
-        sketch = spark.read.parquet(state_dir)
+        sketch = spark.read.parquet(os.path.join(tmp, "counters"))
         est = cms_estimate(sketch, top.select(F.col("w").alias("item")), "item")
-        return (
-            top.join(est, top["w"] == est["item"])
-            .select("w", "exact_count", "est_count")
-            .localCheckpoint(eager=True)
+        return top.join(est, top["w"] == est["item"]).select(
+            "w", "exact_count", "est_count"
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    parts = [docs.filter(F.col("doc_id") % n_batches == i) for i in range(n_batches)]
+    return replay(parts, handle, result)
 
 
 def st_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

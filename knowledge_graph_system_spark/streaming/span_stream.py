@@ -26,16 +26,12 @@ SEEN occurrence is canonical, never retracted.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.fs import parquet_state_exists
-from .landing import dedup_cuts, stamp_landing_mtimes
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+from .landing import range_parts, replay
 
 
 def _positioned_grams(docs: DataFrame, n: int) -> DataFrame:
@@ -156,62 +152,18 @@ def streaming_span_dedup(
     Range (not modulo) batching is load-bearing: ascending ranges make
     every first-occurrence decision final when made, so the streamed
     result equals `span_dedup_apply` over the full corpus exactly."""
-    tmp = tempfile.mkdtemp(prefix="kg_span_stream_")
-    landing = os.path.join(tmp, "landing")
-    gram_dir = os.path.join(tmp, "grams")
-    out_dir = os.path.join(tmp, "out")
-    os.makedirs(landing)
-    os.makedirs(gram_dir)
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    # exact quantile boundaries (rel_err=0) → deterministic ranges;
-    # dedup_cuts drops duplicate boundaries so no batch is empty
-    # (ADVICE r10 — effective batch count is len(cuts) + 1)
-    cuts = dedup_cuts(
-        docs.stat.approxQuantile(
-            "doc_id", [i / n_batches for i in range(1, n_batches)], 0.0
+
+    def handle(batch_df: DataFrame, batch_id: int, tmp: str) -> None:
+        process_span_batch(
+            batch_df, os.path.join(tmp, "grams"), os.path.join(tmp, "out"), n
         )
+
+    return replay(
+        range_parts(docs, "doc_id", n_batches),
+        handle,
+        lambda tmp: spark.read.parquet(os.path.join(tmp, "out")),
     )
-    n_eff = len(cuts) + 1
-    lo = None
-    for i in range(n_eff):
-        part = docs
-        if lo is not None:
-            part = part.filter(F.col("doc_id") > lo)
-        if i < n_eff - 1:
-            part = part.filter(F.col("doc_id") <= cuts[i])
-            lo = cuts[i]
-        bdir = os.path.join(landing, f"batch{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(bdir)
-        # ascending-range replay is only exact if batch i is PROCESSED
-        # before batch i+1; with maxFilesPerTrigger=1 the file source
-        # orders by modification time, and back-to-back writes can
-        # share an mtime on coarse-granularity filesystems (ADVICE
-        # r9). Stamp strictly increasing mtimes so the order is
-        # explicit, not a filesystem accident (streaming/landing.py).
-        stamp_landing_mtimes(bdir, i)
-
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "batch*"))
-        .select("doc_id", "text")
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        process_span_batch(batch_df, gram_dir, out_dir, n)
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def st_spandedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,7 +8,7 @@ demonstrating real windowed semantics on the driver's events table:
 - tumbling / sliding windows: `F.window(ts, size[, slide])`
 - session windows: `F.session_window(ts, gap)` (30 min gap)
 - watermark + late-data handling: `stream_hourly_counts` builds the
-  readStream version of the tumbling agg with `withWatermark` — driven
+  streaming version of the tumbling agg with `withWatermark` — driven
   end-to-end in tests/test_streaming.py with an availableNow trigger.
 
 The batch registrations below share the exact aggregation expressions
@@ -129,8 +129,8 @@ def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_hourly_counts(events_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Structured Streaming twin of st_tumbling_window with late-data
     handling: rows later than `watermark` behind max(ts) are dropped and
-    their windows finalized. Drive with
-    `.writeStream.trigger(availableNow=True).outputMode("append")`."""
+    their windows finalized. Drive it with an append-mode sink and an
+    availableNow trigger."""
     return (
         events_stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

@@ -1110,6 +1110,25 @@ def test_shortest_bidir_random_graphs(spark, cctx):
         assert got == want, (seed, len(got), len(want))
 
 
+def test_shortest_bidir_job_count_ceiling(cctx):
+    """A warm bidirectional wave runs one lazy checkpoint plus one probe
+    aggregate per level (the `_expand` shape): Customer -> Order within
+    3 hops takes at most 24 jobs, where the eager per-level checkpoint,
+    separate probe and seen re-checkpoint took 31-32. Same rows as the
+    cold call."""
+    from knowledge_graph_system_spark.plans.cypher import _shortest_pairs_bidir
+    from tests.test_traversal import _run_in_group
+
+    def run():
+        edf, a_ids, b_ids = _bidir_frames(cctx, "PLACED", "Customer", "Order")
+        return _shortest_pairs_bidir(cctx, edf, a_ids, b_ids, 1, 3)
+
+    cold = sorted(map(tuple, run().collect()))
+    df, jobs = _run_in_group(cctx.spark.sparkContext, "test-jobs-bidir", run)
+    assert sorted(map(tuple, df.collect())) == cold and len(cold) > 0
+    assert len(jobs) <= 24, (len(jobs), jobs)
+
+
 def test_shortest_bidir_state_guard_trips(cctx, monkeypatch):
     """The shared state bound meters the SUM of both waves' visited
     state and refuses deterministically past it."""

@@ -126,7 +126,10 @@ def test_executor_conditionals_and_log(spark, w):
     assert not res.aborted
     assert {x["node_id"] for x in res.working.nodes.collect()} == {"a", "b", "c"}
     assert [s.op for s in res.log] == ["+", "if:empty", "-"]
-    assert calls == ["d", "empty", "d"]
+    # pre_dispatch runs a block's dispatches concurrently, so only the
+    # multiset is fixed ("never" is not dispatched); strict call order
+    # is pinned by test_executor_pre_dispatch_opt_out
+    assert sorted(calls) == ["d", "d", "empty"]
 
 
 def test_executor_abort_surfaces(spark, w):

@@ -124,3 +124,21 @@ def test_every_module_is_reached_outside_tests():
         str(p.relative_to(package)) for p in package.rglob("*.py") if p not in seen
     )
     assert not orphans, f"reached only by tests: {orphans}"
+
+
+def test_streams_start_only_in_the_replay_harness():
+    """`streaming/landing.replay` is the one place a stream is read or
+    started: no other package module touches `readStream` or
+    `writeStream` (checked with `ast`, so docstrings do not count)."""
+    package = Path(__file__).resolve().parent.parent / "knowledge_graph_system_spark"
+    harness = package / "streaming" / "landing.py"
+    offenders = sorted(
+        str(p.relative_to(package))
+        for p in package.rglob("*.py")
+        if p != harness
+        and any(
+            isinstance(node, ast.Attribute) and node.attr in ("readStream", "writeStream")
+            for node in ast.walk(ast.parse(p.read_text()))
+        )
+    )
+    assert not offenders, f"streams started outside streaming/landing.py: {offenders}"

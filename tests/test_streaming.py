@@ -15,6 +15,8 @@ import shutil
 import time
 import uuid
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from knowledge_graph_system_spark.streaming.windows import stream_hourly_counts
@@ -164,3 +166,26 @@ def test_r9_candidate_enrich_stream(spark):
     want = sorted(map(tuple, con.execute(st_enrich_stream_oracle()).fetchall()))
     con.close()
     assert len(got) > 0 and got == want
+
+
+def test_replay_failure_cleans_up(spark):
+    """A handler that raises stops the replay: `replay` re-raises, the
+    batches after the failing one never run, and neither the working
+    dir nor the stream outlives the call."""
+    from knowledge_graph_system_spark.streaming.landing import replay
+
+    parts = [spark.range(i * 2, i * 2 + 2).withColumnRenamed("id", "k") for i in range(3)]
+    seen: list[int] = []
+    tmps: list[str] = []
+
+    def handle(batch_df, batch_id, tmp):
+        seen.append(batch_id)
+        tmps.append(tmp)
+        if batch_id == 1:
+            raise RuntimeError("handler failed on batch 1")
+
+    with pytest.raises(StreamingQueryException, match="handler failed on batch 1"):
+        replay(parts, handle, lambda tmp: spark.range(1))
+    assert seen == [0, 1]
+    assert tmps and not os.path.exists(tmps[0])
+    assert spark.streams.active == []

@@ -14,6 +14,8 @@ python -m pytest tests/test_dsir.py::test_dsir_target_matches_graded_teacher -q
 # No package module may be reachable only from tests (import graph via
 # ast, no Spark): an orphaned module fails here, not after the sweeps.
 python -m pytest tests/test_registry.py::test_every_module_is_reached_outside_tests -q
+# Streams start only in the replay harness (streaming/landing.replay; ast).
+python -m pytest tests/test_registry.py::test_streams_start_only_in_the_replay_harness -q
 echo "=== 1/5 graded gate (sf0.01, full registry) ==="
 python tools/check_correctness.py /root/testdata/sf0.01
 echo "=== 2/5 entry smoke ==="
