@@ -75,12 +75,22 @@ def local_df(spark, data, schema) -> DataFrame:
     smallness contract: this is for seed/stat/codebook/vocabulary
     frames, not data tables.
     """
-    struct = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(struct)
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
     rows = list(data)
-    table = pa.Table.from_arrays(
-        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
-        schema=arrow,
+    df = arrow_df(
+        spark,
+        pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+            schema=arrow,
+        ),
+        schema,
     )
-    df = spark.createDataFrame(table, struct)
     return df.coalesce(1) if len(rows) > 1 else df
+
+
+def arrow_df(spark, table: pa.Table, schema: str) -> DataFrame:
+    """A driver-built Arrow table, whose columns already have the DDL
+    `schema`'s types, as one `LocalTableScan`. Unlike `local_df` it is
+    not coalesced, so `collect` reads it back with no job; callers that
+    cross-join it should coalesce it themselves."""
+    return spark.createDataFrame(table, StructType.fromDDL(schema))

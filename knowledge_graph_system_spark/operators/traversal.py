@@ -8,53 +8,77 @@ Reference semantics being reproduced (NOT the implementation):
   deterministic bounded path enumeration), G4 subgraph extraction
   (`traversal.rs:207-551`), A1 degree centrality (`traversal.rs:552-581`).
 
-Spark-first design: the reference needed a Rust in-memory accelerator
-because Postgres/AGE traversal is row-at-a-time (92 s for depth-5 on a
-236-node graph — BASELINE.md). Here traversal is a loop of broadcast
-hash joins against a cached columnar edge DataFrame, written once in
-`_expand` and shared by `bfs`, `bfs_paths`, `shortest_path_length` and
-`shortest_path`:
+One level loop, two steps. `_expand` is the only frontier loop of
+`bfs`, `bfs_paths`, `shortest_path_length` and `shortest_path`, and the
+only definition of their stop rules: level 0 is the start ids exactly
+as passed, the wave ends after `max_depth` levels, on an empty level,
+or on the level that holds `stop_at`, and the final level is left
+unprobed unless the caller must read it (`probe_last`). Each level
+comes from one of two steps:
 
-- seed: a `local_df` of the start ids is level 0, the first frontier
-  and the first seen set;
-- step: the caller's join of the edge frame against the frontier,
-  minus the seen set (left anti-join). Both sides are counted, so
-  under `_BROADCAST_FRONTIER_MAX` they broadcast and the edge table is
-  never shuffled; past it the planner shuffles (`_frontier_side`);
-- lazy checkpoint plus probe: each level is a lazy local checkpoint
-  that ONE aggregate job materializes while returning the level's row
-  count (the next frontier's size) and, with `stop_at`, whether the
-  target was reached. `persist()` is not an option: CacheManager would
-  substitute the cached subtree into the next bench rep's identical
-  plan, cross-run result caching. The wave stops on an empty level or
-  a hit. A final level that feeds no further hop is left lazy and
-  unprobed unless the caller must read it (`probe_last`);
-- union: the seen set is the union of the already-checkpointed levels
-  (shallow lineage, so no lineage cut is needed), and `bfs`/`bfs_paths`
-  return the union of the levels.
+- local step (`_LocalWave`), the analog of the reference's
+  `graph_accel` (`graph-accel/core/src/graph.rs:77-260`,
+  `traversal.rs:113`): numpy over a driver-local out/in CSR (`Csr`).
+  A level is a sorted array of node codes and the visited set a mask,
+  so a request runs no Spark job until its result, one Arrow-built
+  `LocalTableScan` with the Spark step's schema, is read. It runs only
+  when `edges` IS a `Ctx`'s cached edge view and that view's edge
+  count times `_CSR_BYTES_PER_EDGE` fits the driver's collect budget
+  (`session.driver_result_budget`: the smaller of
+  `spark.driver.maxResultSize` and a quarter of the driver heap).
+  `Ctx.adjacency` counts the edges and builds the CSR from one
+  `toArrow()` on the first such traversal, under the view lock, and
+  never in set-up: analytics and ingest do not pay for it. Ids are
+  interned into a SORTED dictionary, so code order is Spark's string
+  order and every min/tie-break on node id is unchanged ('C10' < 'C9').
+  `bfs`, `shortest_path_length` and `shortest_path` have local twins.
+- Spark step (`_SparkWave`): everything else. That is, derived edge
+  frames (`path_to`'s corridor subgraph, `yen_k_shortest`'s filtered
+  edges), graphs over the bound, and `bfs_paths`, which has no local
+  twin. A level is the caller's join of the edge frame against the
+  frontier, minus the seen set (left anti-join). Both sides are
+  counted, so under `_BROADCAST_FRONTIER_MAX` they broadcast and the
+  edge table is never shuffled; past it the planner shuffles
+  (`_frontier_side`). Each probed level is a lazy local checkpoint that
+  ONE aggregate job materializes while returning the level's row count
+  and, with `stop_at`, whether the target was reached. `persist()` is
+  not an option: CacheManager would substitute the cached subtree into
+  the next bench rep's identical plan, cross-run result caching. The
+  seen set is the union of the already-checkpointed levels (shallow
+  lineage), and `bfs` returns the union of the levels.
 
-A fully fused single-plan variant (level_k = adj ⋈ level_{k-1} chained
-without checkpoints, the reference's fixed-chain idea) was measured
-SLOWER at depth 3: without materialization each level re-derives its
-predecessors, O(d²) edge scans vs O(d) here. Depth is bounded like the
-reference bounds it (max_hops ≤ 10).
+A fully fused single-plan Spark variant (level_k = adj ⋈ level_{k-1}
+chained without checkpoints, the reference's fixed-chain idea) was
+measured SLOWER at depth 3: without materialization each level
+re-derives its predecessors, O(d²) edge scans vs O(d) here. Depth is
+bounded like the reference bounds it (max_hops ≤ 10).
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import Callable
+from typing import Callable, NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scale import local_df
+from ..functions.scale import arrow_df, local_df
 from ..registry import Ctx, query
 from ..sources.graph_view import graph_ctes
 
 # above this frontier size, stop broadcasting and let the planner shuffle:
 # a 100 TB graph can saturate a hub-heavy frontier past driver memory
 _BROADCAST_FRONTIER_MAX = 2_000_000
+
+# driver bytes one edge costs while the local step's CSR is built: the
+# Arrow batches collected in the JVM, their pyarrow copy and the numpy
+# out/in arrays (about 100 bytes at sf0.01, with headroom for longer ids)
+_CSR_BYTES_PER_EDGE = 256
+
+_DIRECTIONS = ("out", "in", "both")
 
 
 def _frontier_side(frontier: DataFrame, n: int | None) -> DataFrame:
@@ -72,44 +96,258 @@ def _frontier_side(frontier: DataFrame, n: int | None) -> DataFrame:
 _Step = Callable[[DataFrame, DataFrame, int], DataFrame]
 
 
+class _SparkWave:
+    """Spark step: levels are lazily checkpointed frames (module docstring)."""
+
+    def __init__(self, spark: SparkSession, step: _Step):
+        self.spark, self._step = spark, step
+
+    def seeds(self, start_ids: list[str]) -> DataFrame:
+        return local_df(self.spark, [(s, 0) for s in start_ids], "node_id string, dist int")
+
+    def visited(self, seeds: DataFrame) -> DataFrame:
+        return seeds.select("node_id")
+
+    def step(self, frontier, n_frontier, seen, n_seen, depth) -> DataFrame:
+        return self._step(
+            _frontier_side(frontier.withColumnRenamed("node_id", "src"), n_frontier),
+            _frontier_side(seen, n_seen),
+            depth,
+        )
+
+    def probe(self, level: DataFrame, stop_at: str | None) -> tuple[DataFrame, int, bool]:
+        level = level.localCheckpoint(eager=False)
+        probes = [F.count(F.lit(1)).alias("n")]
+        if stop_at is not None:
+            probes.append(F.max(F.when(F.col("node_id") == stop_at, 1).otherwise(0)).alias("hit"))
+        stats = level.agg(*probes).first()
+        return level, stats["n"], stop_at is not None and stats["hit"] == 1
+
+    def visit(self, seen: DataFrame, level: DataFrame) -> DataFrame:
+        return seen.unionByName(level.select("node_id"))
+
+    def distances(self, levels: list[DataFrame], start_ids: list[str]) -> DataFrame:
+        return reduce(DataFrame.unionByName, levels)
+
+    def parent(self, level: DataFrame, node_id: str) -> str | None:
+        # one 1-row lookup per depth; the level tables stay distributed
+        row = level.filter(F.col("node_id") == node_id).take(1)
+        return row[0]["parent"] if row else None
+
+
+class _Level(NamedTuple):
+    """A local level: sorted node codes and, for `shortest_path`, each
+    node's parent code."""
+
+    nodes: np.ndarray
+    parent: np.ndarray | None = None
+
+
+class _Adj(NamedTuple):
+    """One direction of a CSR: `ptr[v]:ptr[v+1]` slices v's neighbor
+    codes, rel-type codes (-1 for NULL) and confidences (NaN for NULL)."""
+
+    ptr: np.ndarray
+    nbr: np.ndarray
+    rel: np.ndarray
+    conf: np.ndarray
+
+
+def _adj(key: np.ndarray, other: np.ndarray, rel: np.ndarray, conf: np.ndarray, n: int) -> _Adj:
+    order = np.argsort(key, kind="stable")
+    ptr = np.zeros(n + 1, np.int64)
+    np.cumsum(np.bincount(key, minlength=n), out=ptr[1:])
+    return _Adj(ptr, other[order], rel[order], conf[order])
+
+
+class Csr:
+    """Driver-local out/in adjacency of one edge frame, the local step's
+    graph (module docstring). Node ids are codes into the sorted
+    dictionary `names`, so code order is string order."""
+
+    def __init__(self, names: pa.Array, rel_names: list[str], src, dst, rel, conf):
+        self.names = names
+        self._ids = names.to_numpy(zero_copy_only=False)
+        self._rel = {r: i for i, r in enumerate(rel_names)}
+        self.out = _adj(src, dst, rel, conf, len(names))
+        self.inn = _adj(dst, src, rel, conf, len(names))
+
+    @classmethod
+    def from_arrow(cls, table: pa.Table) -> "Csr | None":
+        """The CSR of an Arrow `(src, dst, rel_type, confidence)` table, or
+        None when an endpoint is NULL (the Spark step keeps that case)."""
+        src, dst = (table.column(c).combine_chunks().cast(pa.string()) for c in ("src", "dst"))
+        if src.null_count or dst.null_count:
+            return None
+        names = pc.unique(pa.concat_arrays([src, dst]))
+        names = names.take(pc.array_sort_indices(names))
+        rel = table.column("rel_type").combine_chunks().cast(pa.string())
+        rel_names = sorted(pc.unique(rel.drop_null()).to_pylist())
+        return cls(
+            names,
+            rel_names,
+            pc.index_in(src, value_set=names).to_numpy(),
+            pc.index_in(dst, value_set=names).to_numpy(),
+            pc.index_in(rel, value_set=pa.array(rel_names, pa.string()))
+            .fill_null(-1)
+            .to_numpy(),
+            table.column("confidence").combine_chunks().to_numpy(zero_copy_only=False),
+        )
+
+    def code(self, node_id: str) -> int | None:
+        i = int(np.searchsorted(self._ids, node_id))
+        return i if i < len(self._ids) and self._ids[i] == node_id else None
+
+    def pairs(
+        self,
+        frontier: np.ndarray,
+        direction: str,
+        min_confidence: float | None = None,
+        rel_types: list[str] | None = None,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(src, dst) code pairs of `directed_edges(edges, direction,
+        min_confidence, rel_types)` whose src is in `frontier`."""
+        sides = {"out": (self.out,), "in": (self.inn,), "both": (self.out, self.inn)}[direction]
+        want = None if rel_types is None else [self._rel[t] for t in rel_types if t in self._rel]
+        srcs, dsts = [], []
+        for adj in sides:
+            starts = adj.ptr[frontier]
+            counts = adj.ptr[frontier + 1] - starts
+            pos = np.repeat(starts - np.cumsum(counts) + counts, counts) + np.arange(counts.sum())
+            keep = np.ones(len(pos), bool)
+            if want is not None:
+                keep &= np.isin(adj.rel[pos], want)
+            if min_confidence is not None:
+                # NULL (NaN here) passes, and Spark orders NaN above every
+                # number, so NaN passes `>=` too
+                keep &= ~(adj.conf[pos] < min_confidence)
+            srcs.append(np.repeat(frontier, counts)[keep])
+            dsts.append(adj.nbr[pos[keep]])
+        return np.concatenate(srcs), np.concatenate(dsts)
+
+    def new_nodes(self, direction: str, min_confidence=None, rel_types=None):
+        """Local twin of `_new_nodes(directed_edges(...))`."""
+        _check_direction(direction)
+
+        def step(frontier: np.ndarray, seen: np.ndarray) -> _Level:
+            _, dst = self.pairs(frontier, direction, min_confidence, rel_types)
+            nodes = np.unique(dst)
+            return _Level(nodes[~seen[nodes]])
+
+        return step
+
+    def parents(self, direction: str):
+        """Local twin of `shortest_path`'s step: each unseen neighbor with
+        its minimum parent code, which is its minimum parent id."""
+        _check_direction(direction)
+
+        def step(frontier: np.ndarray, seen: np.ndarray) -> _Level:
+            src, dst = self.pairs(frontier, direction)
+            keep = ~seen[dst]
+            order = np.lexsort((src[keep], dst[keep]))
+            src, dst = src[keep][order], dst[keep][order]
+            first = np.ones(len(dst), bool)
+            first[1:] = dst[1:] != dst[:-1]
+            return _Level(dst[first], src[first])
+
+        return step
+
+
+class _LocalWave:
+    """Local step: levels are `_Level`s over a `Csr`, the seen set a mask."""
+
+    def __init__(self, spark: SparkSession, graph: Csr, step):
+        self.spark, self.graph, self._step = spark, graph, step
+
+    def seeds(self, start_ids: list[str]) -> _Level:
+        codes = (self.graph.code(s) for s in start_ids)
+        return _Level(np.unique(np.array([c for c in codes if c is not None], np.int64)))
+
+    def visited(self, seeds: _Level) -> np.ndarray:
+        seen = np.zeros(len(self.graph.names), bool)
+        seen[seeds.nodes] = True
+        return seen
+
+    def step(self, frontier, n_frontier, seen, n_seen, depth) -> _Level:
+        return self._step(frontier.nodes, seen)
+
+    def probe(self, level: _Level, stop_at: str | None) -> tuple[_Level, int, bool]:
+        code = None if stop_at is None else self.graph.code(stop_at)
+        i = 0 if code is None else int(np.searchsorted(level.nodes, code))
+        hit = code is not None and i < len(level.nodes) and level.nodes[i] == code
+        return level, len(level.nodes), bool(hit)
+
+    def visit(self, seen: np.ndarray, level: _Level) -> np.ndarray:
+        seen[level.nodes] = True
+        return seen
+
+    def distances(self, levels: list[_Level], start_ids: list[str]) -> DataFrame:
+        """`bfs`'s rows: the start ids as passed at 0, then each level."""
+        names = self.graph.names
+        ids = [pa.array(start_ids, pa.string())] + [names.take(lv.nodes) for lv in levels[1:]]
+        dist = [np.full(len(a), d, np.int32) for d, a in enumerate(ids)]
+        table = pa.table({"node_id": pa.concat_arrays(ids), "dist": np.concatenate(dist)})
+        return arrow_df(self.spark, table, "node_id string, dist int")
+
+    def parent(self, level: _Level, node_id: str) -> str | None:
+        code = self.graph.code(node_id)
+        i = int(np.searchsorted(level.nodes, code)) if code is not None else len(level.nodes)
+        if i == len(level.nodes) or level.nodes[i] != code:
+            return None
+        return self.graph.names[int(level.parent[i])].as_py()
+
+
+def _local_graph(edges: DataFrame) -> Csr | None:
+    """The CSR of `edges` when it is a `Ctx`'s cached edge view under the
+    bound (module docstring), else None."""
+    ctx = Ctx.owning(edges)
+    return None if ctx is None else ctx.adjacency(_CSR_BYTES_PER_EDGE)
+
+
+def _wave(edges: DataFrame, local_step, spark_step):
+    """The local step `local_step(csr)` where it may run, else the Spark
+    step `spark_step()`."""
+    graph = _local_graph(edges)
+    if graph is not None:
+        return _LocalWave(edges.sparkSession, graph, local_step(graph))
+    return _SparkWave(edges.sparkSession, spark_step())
+
+
 def _expand(
-    seeds: DataFrame,
+    wave,
+    seeds,
     n_seeds: int,
     max_depth: int,
-    step: _Step,
     stop_at: str | None = None,
     probe_last: bool = False,
-) -> tuple[list[DataFrame], bool]:
+) -> tuple[list, bool]:
     """The level loop (module docstring) → (levels, hit): levels[0] is
     `seeds`, levels[d] the nodes first reached at depth d; an empty
     level is not returned. `hit` is True when a probed level holds
     `stop_at`; that level is the last one."""
     levels = [seeds]
     frontier, n_frontier = seeds, n_seeds
-    seen, n_seen = seeds.select("node_id"), n_seeds
-    probes = [F.count(F.lit(1)).alias("n")]
-    if stop_at is not None:
-        probes.append(F.max(F.when(F.col("node_id") == stop_at, 1).otherwise(0)).alias("hit"))
+    seen, n_seen = wave.visited(seeds), n_seeds
     for depth in range(1, max_depth + 1):
-        level = step(
-            _frontier_side(frontier.withColumnRenamed("node_id", "src"), n_frontier),
-            _frontier_side(seen, n_seen),
-            depth,
-        )
+        level = wave.step(frontier, n_frontier, seen, n_seen, depth)
         if depth == max_depth and not probe_last:
             levels.append(level)
             break
-        level = level.localCheckpoint(eager=False)
-        stats = level.agg(*probes).first()
-        if stats["n"] == 0:
+        level, n, hit = wave.probe(level, stop_at)
+        if n == 0:
             break
         levels.append(level)
-        if stop_at is not None and stats["hit"] == 1:
+        if hit:
             return levels, True
-        frontier, n_frontier = level, stats["n"]
-        n_seen += n_frontier
-        seen = seen.unionByName(level.select("node_id"))
+        frontier, n_frontier = level, n
+        n_seen += n
+        seen = wave.visit(seen, level)
     return levels, False
+
+
+def _check_direction(direction: str) -> None:
+    if direction not in _DIRECTIONS:
+        raise ValueError(f"direction must be out|in|both, got {direction!r}")
 
 
 def directed_edges(
@@ -174,13 +412,15 @@ def bfs(
     dist_fwd ≤ dist(from, to) by definition. A `stop_at` among the seeds
     is at depth 0, so the seeds are returned unexpanded.
     """
-    spark = edges.sparkSession
-    seeds = local_df(spark, [(s, 0) for s in start_ids], "node_id string, dist int")
     if stop_at is not None and stop_at in start_ids:
-        return seeds
-    adj = directed_edges(edges, direction, min_confidence, rel_types)
-    levels, _ = _expand(seeds, len(start_ids), max_depth, _new_nodes(adj), stop_at)
-    return reduce(DataFrame.unionByName, levels)
+        return local_df(edges.sparkSession, [(s, 0) for s in start_ids], "node_id string, dist int")
+    wave = _wave(
+        edges,
+        lambda g: g.new_nodes(direction, min_confidence, rel_types),
+        lambda: _new_nodes(directed_edges(edges, direction, min_confidence, rel_types)),
+    )
+    levels, _ = _expand(wave, wave.seeds(start_ids), len(start_ids), max_depth, stop_at)
+    return wave.distances(levels, start_ids)
 
 
 def directed_edges_tagged(
@@ -269,7 +509,7 @@ def bfs_paths(
             "m.pdirs",
         )
 
-    levels, _ = _expand(seeds, len(start_ids), max_depth, step)
+    levels, _ = _expand(_SparkWave(spark, step), seeds, len(start_ids), max_depth)
     return reduce(DataFrame.unionByName, levels).select(
         "node_id",
         "dist",
@@ -296,10 +536,13 @@ def shortest_path_length(
     if src_id == dst_id:
         # the start node is reachable at distance 0 (reference BFS rule)
         return local_df(spark, [(src_id, dst_id, 0)], "src string, dst string, dist int")
-    seeds = local_df(spark, [(src_id, 0)], "node_id string, dist int")
-    adj = directed_edges(edges, direction)
+    wave = _wave(
+        edges,
+        lambda g: g.new_nodes(direction),
+        lambda: _new_nodes(directed_edges(edges, direction)),
+    )
     levels, hit = _expand(
-        seeds, 1, max_hops, _new_nodes(adj), stop_at=dst_id, probe_last=True
+        wave, wave.seeds([src_id]), 1, max_hops, stop_at=dst_id, probe_last=True
     )
     rows = [(src_id, dst_id, len(levels) - 1)] if hit else []
     return local_df(spark, rows, "src string, dst string, dist int")
@@ -312,35 +555,40 @@ def shortest_path(
     max_hops: int = 6,
     direction: str = "out",
 ) -> list[str]:
-    """G2 with path reconstruction: BFS recording parent pointers, then a
-    driver-side walk back over the (tiny) parent maps — the exact shape
-    of the reference's Rust reconstruction (`traversal.rs:207-305`) with
-    the per-level parent tables staying distributed until the end."""
+    """G2 with path reconstruction: BFS recording parent pointers (the
+    minimum parent id), then a driver-side walk back over the (tiny)
+    parent maps — the exact shape of the reference's Rust reconstruction
+    (`traversal.rs:207-305`). On the Spark step the per-level parent
+    tables stay distributed until the walk."""
     if src_id == dst_id:
         return [src_id]
-    spark = edges.sparkSession
-    adj = directed_edges(edges, direction)
 
-    def step(frontier: DataFrame, seen: DataFrame, depth: int) -> DataFrame:
-        return (
-            adj.join(frontier, "src")
-            .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.min("src").alias("parent"))  # deterministic parent choice
-            .join(seen, "node_id", "left_anti")
-        )
+    def spark_step() -> _Step:
+        adj = directed_edges(edges, direction)
 
-    seeds = local_df(spark, [(src_id,)], "node_id string")
-    levels, hit = _expand(seeds, 1, max_hops, step, stop_at=dst_id, probe_last=True)
+        def step(frontier: DataFrame, seen: DataFrame, depth: int) -> DataFrame:
+            return (
+                adj.join(frontier, "src")
+                .groupBy(F.col("dst").alias("node_id"))
+                .agg(F.min("src").alias("parent"))  # deterministic parent choice
+                .join(seen, "node_id", "left_anti")
+            )
+
+        return step
+
+    wave = _wave(edges, lambda g: g.parents(direction), spark_step)
+    levels, hit = _expand(
+        wave, wave.seeds([src_id]), 1, max_hops, stop_at=dst_id, probe_last=True
+    )
     if not hit:
         return []
-    # walk back through the per-level parent tables: one 1-row lookup
-    # per depth — the tables themselves stay distributed
+    # walk back through the per-level parent tables
     path = [dst_id]
     for level in reversed(levels[1:]):
-        row = level.filter(F.col("node_id") == path[-1]).take(1)
-        if not row:
+        parent = wave.parent(level, path[-1])
+        if parent is None:
             break
-        path.append(row[0]["parent"])
+        path.append(parent)
     return list(reversed(path))
 
 

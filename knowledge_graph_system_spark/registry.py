@@ -26,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import driver_result_budget
 from .sources.graph_view import edges_df, nodes_df, nodes_with_embeddings, vocabulary_df
 from .sources.tables import load_tables
 
@@ -73,10 +74,19 @@ class Ctx:
                     cls._cache[key] = cls(spark, sf_dir)
         return cls._cache[key]
 
-    # The cached edge/node DataFrames are this engine's analog of the
-    # reference's Rust in-memory graph accelerator (`graph-accel/core/src/
-    # graph.rs:77-260`): load once, traverse many times. On a cluster the
-    # cache is per-executor columnar blocks; embeddings would normally be
+    @classmethod
+    def owning(cls, edges: DataFrame) -> "Ctx | None":
+        """The cached context whose `edges` view IS this frame, if any."""
+        for ctx in list(cls._cache.values()):
+            if ctx.__dict__.get("_edges") is edges:
+                return ctx
+        return None
+
+    # The cached edge/node DataFrames plus `adjacency` are this engine's
+    # analog of the reference's Rust in-memory graph accelerator
+    # (`graph-accel/core/src/graph.rs:77-260`): load once, traverse many
+    # times. On a cluster the cache is per-executor columnar blocks and
+    # the CSR sits on the driver; embeddings would normally be
     # precomputed in storage rather than derived per query.
 
     def _nparts(self) -> int:
@@ -110,6 +120,31 @@ class Ctx:
                         .cache()
                     )
         return self._edges
+
+    def adjacency(self, bytes_per_edge: int):
+        """Driver-local CSR of `edges` (`operators.traversal.Csr`) for the
+        traversal's local step, or None while the edge count times
+        `bytes_per_edge` exceeds the driver's collect budget
+        (`session.driver_result_budget`). The count and the one `toArrow`
+        run on the first call only, never in `edges` itself: analytics
+        and ingest never traverse and never pay for it."""
+        edges = self.edges
+        if not hasattr(self, "_n_edges"):
+            with self._view_lock:
+                if not hasattr(self, "_n_edges"):
+                    self._budget = driver_result_budget(self.spark)
+                    self._n_edges = edges.count()
+        if self._n_edges * bytes_per_edge > self._budget:
+            return None
+        if not hasattr(self, "_adjacency"):
+            with self._view_lock:
+                if not hasattr(self, "_adjacency"):
+                    from .operators.traversal import Csr
+
+                    self._adjacency = Csr.from_arrow(
+                        edges.select("src", "dst", "rel_type", "confidence").toArrow()
+                    )
+        return self._adjacency
 
     @property
     def nodes_emb(self) -> DataFrame:

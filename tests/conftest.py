@@ -23,3 +23,21 @@ def ctx(spark):
     from knowledge_graph_system_spark.registry import Ctx
 
     return Ctx.get(spark, SF_DIR)
+
+
+def _traversal_step(monkeypatch, bytes_per_edge: int) -> None:
+    from knowledge_graph_system_spark.operators import traversal
+
+    monkeypatch.setattr(traversal, "_CSR_BYTES_PER_EDGE", bytes_per_edge)
+
+
+@pytest.fixture
+def spark_step(monkeypatch):
+    """Traversal runs its Spark step: no edge view fits the local bound."""
+    _traversal_step(monkeypatch, 2**62)
+
+
+@pytest.fixture
+def local_step(monkeypatch):
+    """Traversal runs its local step on every cached edge view."""
+    _traversal_step(monkeypatch, 1)

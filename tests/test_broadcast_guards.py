@@ -85,7 +85,7 @@ def test_range_join_band_guard(spark, monkeypatch):
     assert _rows(bare) == _rows(hinted)
 
 
-def test_shortest_path_frontier_guard(spark, monkeypatch):
+def test_shortest_path_frontier_guard(spark, monkeypatch, spark_step):
     """r11: the Class-C per-hop frontier broadcasts in
     shortest_path_length / shortest_path route through _frontier_side
     (counted, O(V)-worst-case frontier on hub graphs). The hint lives
@@ -121,7 +121,7 @@ def test_shortest_path_frontier_guard(spark, monkeypatch):
     assert traversal.shortest_path(edges, "C1", "S1") == hinted_path
 
 
-def test_setops_reach_guards(spark, monkeypatch):
+def test_setops_reach_guards(spark, monkeypatch, spark_step):
     """r11: the path-corridor distance maps (fwd/bwd, O(reach)) and the
     neighborhood/concepts_related node sets go through maybe_broadcast.
     Hint-drop pinned on the returned plans, row identity on both."""
@@ -167,7 +167,7 @@ def test_lc_related_neighborhood_guard(spark, monkeypatch):
     assert _rows(hinted)  # non-empty neighborhood
 
 
-def test_subgraph_and_prune_dangling_guards(spark, monkeypatch):
+def test_subgraph_and_prune_dangling_guards(spark, monkeypatch, spark_step):
     """r11 sweep: subgraph()'s node-set semi-joins and WorkingGraph's
     dangling-prune semi-joins hint only while counted (node sets are
     O(reach)/O(result))."""
@@ -325,7 +325,7 @@ def test_dispatch_degree_guards(spark, monkeypatch):
     assert _rows(h_cd.nodes)  # C1 has out-edges; the set is non-empty
 
 
-def test_blocks_result_ids_guard(spark, monkeypatch):
+def test_blocks_result_ids_guard(spark, monkeypatch, spark_step):
     """r12 (VERDICT r11 next #4, the deferred twin): the block
     compiler's terminal link semi-joins broadcast the program's full
     result-node set — O(V) for a match-all program — now one

@@ -4,6 +4,8 @@ reference itself enforces, `graph-accel/docs/DESIGN.md:279-283`,
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -241,7 +243,7 @@ def _run_in_group(sc, gid: str, fn):
     return out, sc.statusTracker().getJobIdsForGroup(gid)
 
 
-def test_traversal_plans_have_no_python_fed_scan(ctx, monkeypatch):
+def test_traversal_plans_have_no_python_fed_scan(ctx, monkeypatch, spark_step):
     """Seed, visited and result frames are JVM local relations
     (`local_df`): no level plan nor returned plan of bfs,
     shortest_path_length or enumerate_paths scans a Python-fed RDD."""
@@ -264,7 +266,7 @@ def test_traversal_plans_have_no_python_fed_scan(ctx, monkeypatch):
     assert not bad, bad
 
 
-def test_depth1_bfs_broadcasts_its_seed_once(ctx):
+def test_depth1_bfs_broadcasts_its_seed_once(ctx, spark_step):
     """A warm depth-1 bfs broadcasts its 1-row seed at most once: the
     frontier and visited sides are the same local relation, so the
     second broadcast is a ReusedExchange."""
@@ -325,7 +327,8 @@ def _dispatch_nodes(ctx, source: dict):
 
 # (id, call, jobs of the per-loop traversal code this module replaced:
 # warm call, own job group, sf0.001, local[8]; identical at sf0.01 on
-# local[4]). Dispatch kinds are measured through `nodes.collect()`;
+# local[4]). These pin the Spark step (`spark_step`); the local step runs
+# no job until its result is read (`test_local_step_job_ceiling`). Dispatch kinds are measured through `nodes.collect()`;
 # their ceilings are two jobs lower since `subgraph` takes the node-set
 # count its caller already holds instead of counting the set again.
 _JOB_CEILINGS = [
@@ -366,7 +369,7 @@ _JOB_CEILINGS = [
 @pytest.mark.parametrize(
     "gid,call,ceiling", _JOB_CEILINGS, ids=[gid for gid, _, _ in _JOB_CEILINGS]
 )
-def test_traversal_job_count_ceiling(ctx, gid, call, ceiling):
+def test_traversal_job_count_ceiling(ctx, gid, call, ceiling, spark_step):
     """A warm traversal call runs no more Spark jobs than the hand-rolled
     level loops did before they shared `_expand`, and returns the same
     rows as its cold call."""
@@ -381,7 +384,7 @@ def test_traversal_job_count_ceiling(ctx, gid, call, ceiling):
     assert len(jobs) <= ceiling, (len(jobs), jobs)
 
 
-def test_target_at_exactly_max_hops(ctx):
+def test_target_at_exactly_max_hops(ctx, spark_step):
     """S1 is 3 hops from C1. shortest_path_length and shortest_path
     probe the level at exactly max_hops (in as many jobs as a wave with
     hops to spare), so they find S1 at max_hops=3 and nothing at 2; a
@@ -397,3 +400,142 @@ def test_target_at_exactly_max_hops(ctx):
     _, jobs6 = _run_in_group(sc, "test-spl-hops6", lambda: shortest_path(ctx.edges, START, "S1", 6))
     assert len(jobs3) == len(jobs6)
     assert rows(bfs(ctx.edges, [START], 3, stop_at="S1")) == rows(bfs(ctx.edges, [START], 3))
+
+
+def test_local_step_job_ceiling(ctx, local_step):
+    """A warm depth-2 bfs on the driver-local CSR, collected, runs at most
+    one Spark job: the levels are numpy, the result one LocalTableScan."""
+
+    def run():
+        return bfs(ctx.edges, [START], 2).collect()
+
+    cold = run()
+    warm, jobs = _run_in_group(ctx.spark.sparkContext, "test-jobs-local-bfs", run)
+    assert sorted(map(tuple, warm)) == sorted(map(tuple, cold)) and len(warm) > 1
+    assert len(jobs) <= 1, jobs
+
+
+# (id, call, whether the local run has a local step) through both steps:
+# every job-ceiling call, the max_hops edge shapes and the cases where
+# the two steps could part: directions, filters, seeds and targets.
+_MISSING = "ZZ-missing"
+_PARITY = [(gid, call, not gid.startswith("bfs_paths")) for gid, call, _ in _JOB_CEILINGS] + [
+    ("spl-C1-S1-3", lambda c: shortest_path_length(c.edges, START, "S1", 3), True),
+    ("spl-C1-S1-2", lambda c: shortest_path_length(c.edges, START, "S1", 2), True),
+    ("shortest_path-C1-S1-3", lambda c: shortest_path(c.edges, START, "S1", 3), True),
+    ("shortest_path-C1-S1-2", lambda c: shortest_path(c.edges, START, "S1", 2), True),
+    ("bfs-C1-out-d3-stop-S1", lambda c: bfs(c.edges, [START], 3, stop_at="S1"), True),
+    ("bfs-C1-out-d3-stop-seed", lambda c: bfs(c.edges, [START], 3, stop_at=START), False),
+    ("bfs-S1-in-d3", lambda c: bfs(c.edges, ["S1"], 3, direction="in"), True),
+    ("bfs-P1-both-d2", lambda c: bfs(c.edges, ["P1"], 2, direction="both"), True),
+    (
+        "bfs-C1-both-d3-conf",
+        lambda c: bfs(c.edges, [START], 3, direction="both", min_confidence=0.5),
+        True,
+    ),
+    # only NULL-confidence edges pass 1.01
+    ("bfs-S1-in-d2-null-conf", lambda c: bfs(c.edges, ["S1"], 2, "in", min_confidence=1.01), True),
+    ("bfs-C1-rel-types", lambda c: bfs(c.edges, [START], 3, rel_types=["PLACED", "L1", "L4"]), True),
+    ("bfs-C1-rel-types-none", lambda c: bfs(c.edges, [START], 3, rel_types=["NO_SUCH"]), True),
+    ("bfs-duplicate-seeds", lambda c: bfs(c.edges, [START, START, "P1"], 2), True),
+    ("bfs-missing-seed", lambda c: bfs(c.edges, [_MISSING, START], 2), True),
+    ("bfs-missing-stop", lambda c: bfs(c.edges, [START], 2, stop_at=_MISSING), True),
+    ("spl-missing-src", lambda c: shortest_path_length(c.edges, _MISSING, "S1", 3), True),
+    ("shortest_path-missing-dst", lambda c: shortest_path(c.edges, START, _MISSING, 3), True),
+    ("shortest_path-S1-C1-in", lambda c: shortest_path(c.edges, "S1", START, 6, "in"), True),
+    ("shortest_path-P1-P2-both", lambda c: shortest_path(c.edges, "P1", "P2", 4, "both"), True),
+]
+
+
+def _run_steps(monkeypatch, call):
+    """`call()` under the local bound and under the Spark one →
+    {step: (rows, schema, wave classes `_expand` ran)}."""
+    from knowledge_graph_system_spark.operators import traversal
+
+    waves: list[str] = []
+    expand = traversal._expand
+
+    def spy(wave, *args, **kwargs):
+        waves.append(type(wave).__name__)
+        return expand(wave, *args, **kwargs)
+
+    monkeypatch.setattr(traversal, "_expand", spy)
+    out = {}
+    for step, bytes_per_edge in (("local", 1), ("spark", 2**62)):
+        monkeypatch.setattr(traversal, "_CSR_BYTES_PER_EDGE", bytes_per_edge)
+        waves.clear()
+        res = call()
+        if isinstance(res, list):
+            out[step] = (res, None, set(waves))
+        else:
+            rows = sorted((tuple(r) for r in res.collect()), key=repr)
+            out[step] = (rows, res.schema, set(waves))
+    return out
+
+
+@pytest.mark.parametrize("gid,call,local", _PARITY, ids=[gid for gid, _, _ in _PARITY])
+def test_steps_return_equal_rows(ctx, monkeypatch, gid, call, local):
+    """The local and the Spark step return the same rows, with the same
+    schema, for every traversal shape; the bound really picks the step."""
+    out = _run_steps(monkeypatch, lambda: call(ctx))
+    assert out["local"][:2] == out["spark"][:2]
+    assert "_LocalWave" not in out["spark"][2]
+    assert ("_LocalWave" in out["local"][2]) == local, out["local"][2]
+    if gid == "bfs-S1-in-d2-null-conf":
+        assert len(out["local"][0]) > 1  # NULL-confidence edges were followed
+
+
+def test_shortest_path_parent_tie_in_string_order(spark, monkeypatch):
+    """Z has two parents at depth 1; Spark's min(src) picks 'C10' (string
+    order), not 'C9' (numeric order) nor the first-seen edge, and so does
+    the local step's sorted dictionary."""
+    from knowledge_graph_system_spark.registry import Ctx
+
+    edges = spark.createDataFrame(
+        [
+            ("A", "C9", "r", 1.0),
+            ("A", "C10", "r", 1.0),
+            ("C9", "Z", "r", None),
+            ("C10", "Z", "r", 0.5),
+        ],
+        "src string, dst string, rel_type string, confidence double",
+    )
+    ctx = Ctx.__new__(Ctx)
+    ctx.spark, ctx._edges, ctx._view_lock = spark, edges, threading.Lock()
+    monkeypatch.setitem(Ctx._cache, ("test-tie", id(edges)), ctx)
+    out = _run_steps(monkeypatch, lambda: shortest_path(edges, "A", "Z", 3))
+    assert out["local"][0] == out["spark"][0] == ["A", "C10", "Z"]
+    assert out["local"][2] == {"_LocalWave"} and out["spark"][2] == {"_SparkWave"}
+
+
+def test_concurrent_first_traversals_build_one_csr(spark, monkeypatch, local_step):
+    """Program statements may traverse concurrently: racing first
+    traversals of a fresh context build its CSR once and agree."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from knowledge_graph_system_spark.operators import traversal
+    from knowledge_graph_system_spark.registry import Ctx
+    from tests.conftest import SF_DIR
+
+    ctx = Ctx(spark, SF_DIR)
+    monkeypatch.setitem(Ctx._cache, ("test-race", SF_DIR), ctx)
+    builds = []
+    from_arrow = traversal.Csr.from_arrow.__func__
+
+    def counted(cls, table):
+        builds.append(1)
+        return from_arrow(cls, table)
+
+    monkeypatch.setattr(traversal.Csr, "from_arrow", classmethod(counted))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(lambda: bfs(ctx.edges, [START], 2).collect()) for _ in range(8)]
+            results = [sorted(map(tuple, f.result(timeout=300))) for f in futures]
+    finally:
+        sys.setswitchinterval(switch)
+        ctx.edges.unpersist()
+    assert builds == [1]
+    assert all(r == results[0] for r in results) and len(results[0]) > 1
